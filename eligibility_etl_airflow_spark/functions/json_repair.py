@@ -7,18 +7,14 @@ src/predictions.py:170-176 fence stripping; src/resubmission_recovery.py:
 first balanced ``{...}`` → regex ``"id": "reason"`` pairs → empty fallback.
 
 This is one of the few genuinely non-declarative operators (SURVEY.md
-§2.12): it runs as an Arrow-batched pandas UDF, never row-at-a-time.
+§2.12): the predictions pipeline calls it inside its Arrow-batched
+stage, never as a row-at-a-time UDF.
 """
 
 from __future__ import annotations
 
 import json
 import re
-
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _FENCE_RE = re.compile(r"^\s*```(?:json)?\s*|\s*```\s*$", re.MULTILINE)
 _PAIR_RE = re.compile(r'"?(\d{1,20})"?\s*:\s*"((?:[^"\\]|\\.)*)"')
@@ -82,21 +78,3 @@ def repair_json(text: str | None) -> dict:
     # 5. empty fallback
     return {}
 
-
-def _repair_batch(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: json.dumps(repair_json(t), sort_keys=True))
-
-
-def repair_json_column(col: Column) -> Column:
-    """Arrow-batched repair ladder → canonical JSON string (sorted keys),
-    ready for ``from_json`` with a declared schema downstream.
-
-    (UDF built lazily — pandas_udf registration needs an active session.)
-    """
-    return pandas_udf(_repair_batch, "string")(col)
-
-
-def repaired_map(col: Column) -> Column:
-    """Repair then parse to MapType(string,string) — the reference's
-    service-id → reason response maps (predictions.py:201-290)."""
-    return F.from_json(repair_json_column(col), "map<string,string>")

@@ -35,16 +35,6 @@ from eligibility_etl_airflow_spark.operators.parallel import (  # noqa: E402
 )
 
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of the normalized text. Convenience
-    for small relations / ad-hoc use: the inline normalize re-evaluates
-    once per shingle position inside the transform lambda — on a hot
-    path, stage ``_with_normalized_text`` and use
-    ``hashed_shingles_of_norm`` (see its docstring for the measured
-    cost)."""
-    return string_shingles_of_norm(normalize_text(col), k)
-
-
 def hashed_shingles_of_norm(norm: Column, k: int = 5) -> Column:
     """Distinct 64-bit-hashed character k-shingles of ALREADY-NORMALIZED
     text. Set ops over long arrays are ~5× cheaper than over string
@@ -65,8 +55,8 @@ def hashed_shingles_of_norm(norm: Column, k: int = 5) -> Column:
     # transform(sequence, substring) evaluated two expressions per
     # position (2.53 s → 0.34 s at sf0.1 on the 5-gram stage, outputs
     # verified identical). The otherwise-branch keeps the EXACT old
-    # short/null semantics: n < k yields [hash(substring(norm, 1, k))]
-    # (the clamped whole text), null stays null.
+    # short/null semantics: n < k yields the one clamped gram
+    # substring(norm, 1, k), which is the whole text, so [hash(norm)].
     # r11: trailing consuming dot — after a zero-width match Java's
     # Matcher advances by one UTF-16 code UNIT, so a supplementary-plane
     # char (emoji) emitted an extra spurious gram starting at its low
@@ -74,7 +64,6 @@ def hashed_shingles_of_norm(norm: Column, k: int = 5) -> Column:
     # parity with the substring path on BMP and non-BMP inputs alike
     # (pinned by tests/test_neardup.py::test_shingles_non_bmp_parity).
     pat = "(?s)(?=(" + "." * k + "))."
-    starts = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
     return F.when(
         n >= k,
         F.array_distinct(
@@ -83,11 +72,7 @@ def hashed_shingles_of_norm(norm: Column, k: int = 5) -> Column:
                 lambda s: F.xxhash64(s),
             )
         ),
-    ).otherwise(
-        F.array_distinct(
-            F.transform(starts, lambda i: F.xxhash64(F.substring(norm, i, k)))
-        )
-    )
+    ).otherwise(F.array(F.xxhash64(norm)))
 
 
 def string_shingles_of_norm(norm: Column, k: int = 5) -> Column:
@@ -99,16 +84,13 @@ def string_shingles_of_norm(norm: Column, k: int = 5) -> Column:
     reference (see the per-element lambda re-evaluation note on the
     hashed variant)."""
     n = F.length(norm)
-    # one-regex-pass extraction + consuming dot for non-BMP parity; see
-    # hashed_shingles_of_norm (r10/r11)
+    # one-regex-pass extraction + consuming dot for non-BMP parity, and
+    # the one-clamped-gram rule for short text; see hashed_shingles_of_norm
     pat = "(?s)(?=(" + "." * k + "))."
-    starts = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
     return F.when(
         n >= k,
         F.array_distinct(F.regexp_extract_all(norm, F.lit(pat), F.lit(1))),
-    ).otherwise(
-        F.array_distinct(F.transform(starts, lambda i: F.substring(norm, i, k)))
-    )
+    ).otherwise(F.array(norm))
 
 
 def _with_normalized_text(
@@ -134,7 +116,10 @@ def _with_normalized_text(
 
 def _utf8_concat(texts):
     """Concatenate a batch of strings into one flat uint8 buffer plus
-    doc byte boundaries (len = n_docs + 1)."""
+    doc byte boundaries (len = n_docs + 1). Every element must be a
+    ``str``: a None/NaN raises AttributeError. ``_winnow_stage`` feeds it
+    the ``_norm`` column of ``_with_normalized_text``, which drops null
+    text before normalizing; the char-feature path maps None to ""."""
     import numpy as np
 
     bufs = [s.encode("utf-8") for s in texts]
@@ -190,66 +175,6 @@ def _char_gram_offsets(flat, doc_starts, k, clamp_short: bool = True):
     )
 
 
-def _hashed_shingle_stage(
-    staged: DataFrame, k: int, extra: tuple[str, ...] = ()
-) -> DataFrame:
-    """(id, [extra...], _norm) → (id, [extra...], shingles array<long>):
-    the distinct 64-bit-hashed char-k-shingle set per document as ONE
-    Arrow-batched numpy stage — the bit-exact vectorized twin of
-    ``array_distinct(transform(grams, xxhash64))`` (grams as byte
-    slices over a UTF-8 continuation-byte mask, hashes via
-    :mod:`operators.xxh64`, dedup in array_distinct's first-occurrence
-    order; pinned by
-    tests/test_xxh64.py::test_hashed_shingle_stage_matches_expression).
-
-    **Measured NEGATIVE for shingle_table (r11, guide §1):** replacing
-    the r10 regex+transform JVM form with this stage cost MORE task
-    time at sf0.1 (1.1 → 2.8 s same-session A/B; in-suite
-    dedup_minhash_lsh 2.10 → 3.03 s standalone) — after r10's one-pass
-    regex rewrite the JVM shingle build is cheap, and the Arrow
-    transport of the full (id, ~3000-long shingles) relation back to
-    the JVM dominates. shingle_table therefore stays on the JVM form.
-    The stage remains as the tested building block for paths where the
-    Python boundary is already paid or the output is much smaller than
-    the gram stream (``_winnow_stage``, whose JVM form paid TWO
-    interpreted per-element passes and measured 8.9 → 2.5 s task time
-    the other way)."""
-    import numpy as np
-    import pandas as pd
-
-    from eligibility_etl_airflow_spark.operators.xxh64 import xxh64_slices
-
-    id_type = staged.schema["id"].dataType.simpleString()
-    extra_schema = "".join(
-        f", {c} {staged.schema[c].dataType.simpleString()}" for c in extra
-    )
-
-    def batch(frames):
-        for pdf in frames:
-            flat, doc_starts = _utf8_concat(pdf["_norm"])
-            n_docs = len(doc_starts) - 1
-            if not n_docs:
-                continue
-            starts, lens, didx = _char_gram_offsets(flat, doc_starts, k)
-            hashes = xxh64_slices(flat, starts, lens)
-            # array_distinct twin: drop repeats of (doc, hash) keeping
-            # the FIRST occurrence, then split back into per-doc arrays
-            keep = ~pd.DataFrame({"d": didx, "h": hashes}).duplicated().values
-            kept_d = didx[keep]
-            kept_h = hashes[keep]
-            counts = np.bincount(kept_d, minlength=n_docs)
-            bounds = np.cumsum(counts)[:-1]
-            out = {"id": pdf["id"]}
-            for c in extra:
-                out[c] = pdf[c]
-            out["shingles"] = np.split(kept_h, bounds)
-            yield pd.DataFrame(out)
-
-    return staged.mapInPandas(
-        batch, schema=f"id {id_type}{extra_schema}, shingles array<long>"
-    )
-
-
 def shingle_table(
     df: DataFrame, id_col: str, text_col: str, shingle_k: int = 5
 ) -> DataFrame:
@@ -257,11 +182,7 @@ def shingle_table(
     per document. Computed ONCE and shared by both the MinHash signature
     derivation and the exact-Jaccard verification join (persist it when
     both consumers run in one job — otherwise each branch re-runs the
-    scan + regex normalize + shingling pass over the full corpus).
-
-    Stays on the JVM column form: the numpy twin
-    (``_hashed_shingle_stage``) measured 2.5× MORE task time here —
-    see its docstring for the r11 A/B."""
+    scan + regex normalize + shingling pass over the full corpus)."""
     return _with_normalized_text(df, id_col, text_col).select(
         "id", hashed_shingles_of_norm(F.col("_norm"), shingle_k).alias("shingles")
     )

@@ -3,10 +3,10 @@
 Spark's ``xxhash64(string_col)`` hashes the string's UTF-8 bytes with
 the standard XXH64 algorithm (Collet's public-domain xxHash, the
 little-endian variant Spark's ``XXH64.hashUnsafeBytes`` implements) at
-seed 42. The minhash family's hottest remaining CPU stage (r10: ~90 s
-of task time at sf0.1) is the per-position ``transform(...,
-xxhash64(substring/gram))`` shingle hash — replacing it with a numpy
-stage requires reproducing the JVM hash bit for bit, which this module
+seed 42. The winnowing stage (``neardup._winnow_stage``) and the
+trainers' driver-side featurizers (``quality_model``) hash char and
+token grams in numpy instead of ``transform(..., xxhash64(gram))`` —
+that requires reproducing the JVM hash bit for bit, which this module
 does: every u64 op runs with explicit wraparound, reads are
 little-endian (matching both the xxHash spec and Spark's
 ``Platform.getLong`` on this platform family), and the three tail
@@ -54,9 +54,11 @@ def xxh64_u8mat(mat: np.ndarray, seed: int = 42) -> np.ndarray:
     """XXH64 of each ROW of an (n, L) uint8 matrix → (n,) int64 (the
     JVM's signed view of the u64 hash). All rows share one length L, so
     the whole stripe/tail structure is compile-time-fixed and every op
-    vectorizes across rows."""
+    vectorizes across rows. Any other shape raises ValueError."""
     mat = np.ascontiguousarray(mat, dtype=np.uint8)
-    n, length = mat.shape if mat.ndim == 2 else (mat.shape[0], 0)
+    if mat.ndim != 2:
+        raise ValueError(f"xxh64_u8mat needs an (n, L) matrix, got shape {mat.shape}")
+    n, length = mat.shape
     s = np.uint64(seed)
     with np.errstate(over="ignore"):
         if length >= 32:

@@ -4,10 +4,9 @@ sets, batch gap-sessionization, and the Bloom-pruned semi join.
 The reference's analysis notebook pivots its KPI frame in pandas
 (analysis layer) and its DAGs re-query per business dimension; a
 complete engine expresses those as single shuffled plans. Every query
-here is oracle-backed (DuckDB twin) and registers past the driver's
-50-slot window (see registry._DEFERRED) because the window is already
-saturated with the reference-derived surface; tests/test_oracle_parity.py
-grades them locally on every run.
+here is oracle-backed (DuckDB twin); those not named in registry._GRADED
+register past the driver's 50-slot window, and
+tests/test_oracle_parity.py grades them all locally on every run.
 """
 
 from __future__ import annotations

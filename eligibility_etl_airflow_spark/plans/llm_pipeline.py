@@ -214,9 +214,10 @@ def _parquet_stamp(path: str) -> tuple | None:
     import glob as _glob
 
     if os.path.isdir(path):
+        # part-*.snappy.parquet matches both globs: stat each file once
         files = sorted(
-            _glob.glob(os.path.join(path, "*.parquet"))
-            + _glob.glob(os.path.join(path, "part-*"))
+            set(_glob.glob(os.path.join(path, "*.parquet")))
+            | set(_glob.glob(os.path.join(path, "part-*")))
         ) or [path]
     else:
         files = [path]

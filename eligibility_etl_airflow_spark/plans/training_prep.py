@@ -5,10 +5,9 @@ order-preserving token-balanced sharding, chat-transcript (SFT)
 normalization, DSIR importance resampling, temperature mixing,
 cross-corpus priority merge, and n-gram novelty scoring.
 
-All but the seed-dependent temperature resample are oracle-backed
-(DuckDB twins) and register PAST the driver's 50-slot grading window
-(registry._DEFERRED) so the graded set stays byte-stable;
-tests/test_oracle_parity.py hash-checks them locally on every run.
+Most are oracle-backed (DuckDB twins); those not named in
+registry._GRADED register past the driver's 50-slot grading window, and
+tests/test_oracle_parity.py hash-checks every one locally on every run.
 """
 
 from __future__ import annotations

@@ -53,93 +53,11 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 # The grading harness oracle-checks the first 50 registered queries, so
-# ordering is part of the contract: oracle-backed queries must register
-# ahead of the rows-only ones or they silently lose their hash check.
-# With more oracle-backed queries than window slots, the excess sits past
-# the window in _DEFERRED; every registered query (graded or deferred)
-# keeps local DuckDB parity via tests/test_oracle_parity.py, which mirrors
-# the driver's exact rows+schema+values contract on every pytest run.
-#
-# ROTATION POLICY (adopted round 6): the graded window ROTATES each round
-# rather than accreting. Queries that have held a green driver-graded row
-# for >=2 consecutive rounds and whose operator machinery is covered by at
-# least one other graded query are demotion candidates; never-driver-graded
-# oracle-backed queries are promotion candidates. Each round: demote ~N
-# stable queries into _ROTATED_OUT and promote ~N from _DEFERRED, keeping
-# the rank-0 (graded) count at exactly 50. This converts local-parity
-# claims into independent driver-graded confirmation at zero
-# implementation cost. NEW oracle-backed queries land in _DEFERRED first
-# and earn promotion in a later round.
-#
-# Round-6 rotation: 25 queries graded green in rounds 1-5 (flagship-join,
-# scalar-agg, window, date and dedup machinery each still held in-window
-# by eligibility_flagship, resubmission_flagship, latest_order_dense_rank,
-# percentile_stats, pricing_summary_sql, the stream_* family, and the
-# text/similarity rows) moved to _ROTATED_OUT; 25 never-graded queries
-# (crawl tier, link graph, pair mining, curation, retrieval) promoted.
-
-# Round-7 rotation (#2 of the program): 25 queries graded green in
-# round 6 demoted, 25 never-driver-graded promoted. Demotions split in
-# two tiers, each leaving its machinery in-window:
-#   - 13 long-stable rows (graded green 4-6 consecutive rounds): the
-#     text tier (text_quality_scores, lang_id_heuristic,
-#     ngram_jaccard_pairs, similarity_topk_bruteforce, pii_redaction,
-#     tfidf_top_terms — shingle/blocked-join machinery stays via
-#     set_similarity_pairs + bm25_search; regex machinery via the
-#     promoted mojibake_metrics/blocklist_filter), three of the five
-#     stream_* rows (watermark machinery returns via the promoted
-#     stream_interval_join; sessionization via session_gap_events;
-#     stream_dedup_overlap + stream_stateful_running_spend stay), the
-#     TPC-H trio pricing_summary_sql / asof_join_events /
-#     range_join_events (grouped-agg machinery via the promoted
-#     cube_revenue; time-join machinery via stream_interval_join +
-#     gap_fill_timeseries), and beneficiary_enrichment (struct→cols
-#     machinery stays via fhir_extract_bundle).
-#   - 12 round-6 crawl/retrieval/curation rows whose machinery another
-#     in-window or promoted row still exercises: url_components_parse
-#     (→ promoted url_domain_stats), html_text_extract (→ promoted
-#     anchor_text_pairs + link_graph_edges stays), sitemap_parse /
-#     domain_hits / payload_triage (robots_url_filter,
-#     frontier_schedule, domain_pagerank stay), corpus_data_card (→
-#     promoted token_frequency_spectrum + source_dup_diagnostics),
-#     corpus_pair_drift (→ promoted corpus_drift_js, same telescoping
-#     JSD), decontamination_overlap (→ promoted substring_ and
-#     semantic_decontam_flags), hybrid_retrieval_rrf (bm25_search
-#     stays), cluster_representatives (dedup_connected_components
-#     stays), merge_corpora_priority (dsir_selection +
-#     leakage_safe_split stay), snapshot_diff_cdc (scd2_user_status
-#     stays).
-_ROTATED_OUT_R7 = (
-    "beneficiary_enrichment",
-    "text_quality_scores",
-    "lang_id_heuristic",
-    "ngram_jaccard_pairs",
-    "similarity_topk_bruteforce",
-    "pii_redaction",
-    "tfidf_top_terms",
-    "stream_tumbling_daily",
-    "stream_sliding_270_240",
-    "stream_session_windows",
-    "pricing_summary_sql",
-    "asof_join_events",
-    "range_join_events",
-    "url_components_parse",
-    "html_text_extract",
-    "sitemap_parse",
-    "domain_hits",
-    "payload_triage",
-    "corpus_data_card",
-    "corpus_pair_drift",
-    "decontamination_overlap",
-    "hybrid_retrieval_rrf",
-    "cluster_representatives",
-    "merge_corpora_priority",
-    "snapshot_diff_cdc",
-)
-
-# Graded green rounds 1-5; demoted round 6 under the rotation policy.
-# Machinery each rides remains in-window per the mapping above.
-_ROTATED_OUT = (
+# ordering is part of the contract. _GRADED names those 50; the other
+# oracle-backed queries follow them, and the rows-only queries come last.
+# Every oracle-backed query keeps local DuckDB parity via
+# tests/test_oracle_parity.py, whether or not it is in the window.
+_GRADED = (
     "predicates_in_like_window",
     "semi_join_key_set",
     "anti_join_resume",
@@ -156,232 +74,47 @@ _ROTATED_OUT = (
     "global_topk_orders",
     "multi_format_date_parse",
     "age_birthday_corrected",
-    "json_field_extract",
-    "struct_expand",
-    "business_rule_updates",
-    "predictions_auto_reject",
-    "dedup_exact_hash",
-    "doc_fingerprint",
-    "dropna_filters",
-    "running_total_window",
-    "rollup_revenue",
-)
-
-# Round-8 rotation (#3 — COMPLETES the independent-confirmation program:
-# after this round every oracle-backed query has held a green
-# driver-graded row at least once). Exactly 29 never-driver-graded
-# queries remained after round 7, and 29 < 50, so all of them promote in
-# one rotation. Demotions (29) split in two tiers:
-#   - the 25 multi-round-stable rows (graded green in BOTH r6 and r7,
-#     several green since r1): the flagship/FHIR/LLM pipelines (their
-#     machinery is additionally smoke-checked every round via entry(),
-#     re-exercised in-window by llm_cost_metrics which re-runs the full
-#     LLM pipeline, and join/agg machinery rides the promoted
-#     funnel/cohort/set-ops/rank-family rows), percentile_stats /
-#     salted_join_skew / latest_order_dense_rank (window+agg machinery
-#     via promoted rank_family_windows, rolling_zscore_anomalies,
-#     incremental_rollup), the crawl/retrieval r6 tier (bm25_search,
-#     link_graph_edges, domain_pagerank, robots_url_filter,
-#     frontier_schedule — URL machinery stays via url_domain_stats +
-#     anchor_text_pairs), the dedup/similarity r6 tier
-#     (dedup_connected_components, set_similarity_pairs,
-#     containment_pairs, semantic_dedup_label, document_chunks —
-#     machinery via promoted dedup_global_segments, centroid_assignments,
-#     fuzzy_pairs_levenshtein, and the staying decontam rows), dsir /
-#     leakage_safe_split (selection machinery via promoted
-#     weighted_sample_docs, train_test_split_hash, data_budget_plan),
-#     scd2 / stream rows (streaming machinery stays via
-#     stream_interval_join + promoted stream_static_enrich).
-#   - 4 single-round rows with an exact promotion twin: duplicate_text_spans
-#     → duplicate_span_partners (same operator, with_partner=True superset),
-#     dedup_span_removal → dedup_global_segments (segment machinery),
-#     frequent_ngrams → ngram_novelty_scores + lm_bigram_scores (n-gram
-#     machinery), token_frequency_spectrum → balanced_token_shards
-#     (token-count machinery).
-_ROTATED_OUT_R8 = (
-    "bm25_search",
-    "containment_pairs",
-    "dedup_connected_components",
-    "document_chunks",
-    "domain_pagerank",
-    "dsir_selection",
-    "eligibility_flagship",
-    "eligibility_quality_gate",
-    "fhir_extract_bundle",
-    "fhir_find_keys_udf",
-    "frontier_schedule",
-    "latest_order_dense_rank",
-    "leakage_safe_split",
-    "link_graph_edges",
-    "llm_predictions_pipeline",
-    "percentile_stats",
-    "rest_enrichment_pipeline",
-    "resubmission_flagship",
-    "robots_url_filter",
-    "salted_join_skew",
-    "scd2_user_status",
-    "semantic_dedup_label",
-    "set_similarity_pairs",
-    "stream_dedup_overlap",
-    "stream_stateful_running_spend",
-    "duplicate_text_spans",
-    "dedup_span_removal",
-    "frequent_ngrams",
-    "token_frequency_spectrum",
-)
-
-# Round-9 rotation (#4 — the independent-confirmation program finished
-# in r8, so this is the first pure FRESHNESS cycle): demote 12 rows
-# that were driver-graded green in BOTH r7 and r8 (the policy's ≥2
-# consecutive-green bar), promote the 10 longest-ungraded stable rows
-# (the relational tier demoted in r6, last graded r5) plus the round's
-# 2 NEW oracle-backed queries (the r8 verdict item: oracle-ize the
-# derivable rows-only ops):
-#   - winnow_overlap_pairs_md5 — the winnowing pipeline with hash_fn=md5
-#     so DuckDB reproduces it (plans/llm_pipeline.py)
-#   - heavy_hitters_verified — Count-Min candidates verified by exact
-#     counts, output = GROUP BY/HAVING truth (plans/extras.py)
-# Machinery of every demotion stays in-window: map_explode_fields →
-# chat_turns_extract + script_profile_mixed; repetition_metrics →
-# lm_fluency/lm_bigram/ngram_novelty; pivot/unpivot/cube → the promoted
-# grouped_multi_agg + kpi_scalar_aggs + date_rollup_daily;
-# session_gap_events / gap_fill_timeseries → stream_interval_join +
-# rolling_zscore_anomalies; unicode_nfc_normalize → mojibake_metrics +
-# script_profile_mixed; blocklist_filter → substring_decontam_flags;
-# url_domain_stats → anchor_text_pairs; shard_manifest →
-# balanced_token_shards; line_dedup_boilerplate → dedup_global_segments.
-_ROTATED_OUT_R9 = (
-    "map_explode_fields",
-    "repetition_metrics",
-    "pivot_status_matrix",
-    "unpivot_measures",
-    "cube_revenue",
-    "session_gap_events",
-    "gap_fill_timeseries",
-    "unicode_nfc_normalize",
-    "blocklist_filter",
-    "url_domain_stats",
-    "shard_manifest",
-    "line_dedup_boilerplate",
-)
-
-# r6-demoted relational rows returning to the window in r9 (freshness:
-# last driver-graded r5). Pinned in tests/test_registry.py::PROMOTED_R9.
-_PROMOTED_R9 = (
-    "predicates_in_like_window",
-    "semi_join_key_set",
-    "anti_join_resume",
-    "coalesce_key_join",
-    "latest_order_row_number",
-    "string_agg_per_group",
-    "topk_frequency",
-    "kpi_scalar_aggs",
-    "date_rollup_daily",
-    "grouped_multi_agg",
-)
-
-# Round-10 rotation (#5 — retires the staleness TAIL: after this cycle
-# the max staleness across all 135 oracle-backed queries is ≤4 rounds):
-# demote 19 rows driver-graded green in BOTH r8 and r9 (the ≥2
-# consecutive-green bar; eight of them carry three consecutive greens
-# r7-r9), promote the 17 longest-ungraded rows — regex_text_ops +
-# split_explode_keys (last graded r2) and the full r5-graded relational
-# block — plus the round's 2 NEWLY ORACLE-IZED queries (the r9 verdict
-# item: temperature_mix_resample + domain_mix_resample now draw by the
-# same engine-portable md5-uniform rule as weighted_sample_docs, so
-# DuckDB reproduces membership exactly; rows-only set shrinks 25 → 23).
-# Machinery of every demotion stays in-window or returns via a
-# promotion: regex/normalization (script_profile_mixed, mojibake_metrics)
-# → promoted regex_text_ops; map/struct explode (chat_turns_extract) →
-# promoted split_explode_keys + struct_expand (LLM G-tier machinery
-# stays via llm_cost_metrics, which re-executes the pipeline); dedup
-# segments/spans → promoted keep_last_dedup + dedup_exact_hash +
-# duplicate_detection_label; decontam (substring_) →
-# semantic_decontam_flags stays; streaming interval join →
-# stream_static_enrich stays; rollup (incremental_rollup) → promoted
-# rollup_revenue; hash-split (train_test_split_hash) + md5-rank
-# (epoch_shuffle_order) → weighted_sample_docs stays + the two promoted
-# resamples; LM scores (lm_fluency/lm_bigram) → ngram_novelty_scores
-# stays; analytics (cohort_retention, quality_rank_blend,
-# data_quality_report) → funnel_signup_click_purchase,
-# rank_family_windows, column_profile stay; crawl tier
-# (anchor_text_pairs, corpus_drift_js, source_dup_diagnostics,
-# fuzzy_pairs_levenshtein) → winnow_overlap_pairs_md5 +
-# heavy_hitters_verified stay.
-_ROTATED_OUT_R10 = (
-    "source_dup_diagnostics",
-    "stream_interval_join",
-    "chat_turns_extract",
-    "substring_decontam_flags",
-    "script_profile_mixed",
-    "anchor_text_pairs",
-    "corpus_drift_js",
-    "mojibake_metrics",
-    "quality_rank_blend",
-    "fuzzy_pairs_levenshtein",
-    "dedup_global_segments",
-    "duplicate_span_partners",
-    "lm_fluency_scores",
-    "lm_bigram_scores",
-    "incremental_rollup",
-    "train_test_split_hash",
-    "cohort_retention",
-    "data_quality_report",
-    "epoch_shuffle_order",
-)
-
-# The staleness tail returning to the window in r10 (last driver-graded
-# r2/r5; the two resamples are newly oracle-backed and enter the window
-# directly). Pinned in tests/test_registry.py::PROMOTED_R10.
-_PROMOTED_R10 = (
     "regex_text_ops",
     "split_explode_keys",
-    "age_birthday_corrected",
-    "business_rule_updates",
-    "dedup_exact_hash",
-    "distinct_key_set",
-    "doc_fingerprint",
-    "dropna_filters",
-    "duplicate_detection_label",
-    "global_topk_orders",
     "json_field_extract",
-    "keep_last_dedup",
-    "multi_format_date_parse",
-    "predictions_auto_reject",
-    "rollup_revenue",
-    "running_total_window",
     "struct_expand",
+    "business_rule_updates",
+    "predictions_auto_reject",
+    "llm_cost_metrics",
+    "dedup_exact_hash",
+    "doc_fingerprint",
+    "winnow_overlap_pairs_md5",
+    "domain_mix_resample",
+    "centroid_assignments",
+    "stream_static_enrich",
+    "dropna_filters",
+    "running_total_window",
+    "rollup_revenue",
+    "heavy_hitters_verified",
+    "contiguous_row_ids",
+    "column_profile",
+    "weighted_sample_docs",
+    "bloom_semi_join_scan",
+    "group_sample_deterministic",
+    "price_histogram",
+    "feature_correlations",
+    "rank_family_windows",
+    "set_ops_customers",
+    "funnel_signup_click_purchase",
+    "rolling_zscore_anomalies",
+    "skew_profile_events",
+    "semantic_decontam_flags",
+    "balanced_token_shards",
+    "temperature_mix_resample",
+    "ngram_novelty_scores",
+    "data_budget_plan",
 )
-
-# Oracle-backed queries currently outside the 50-slot window. All keep
-# local DuckDB parity via tests/test_oracle_parity.py. Each round's
-# rotation removes its promotions and appends its demotions (pins in
-# tests/test_registry.py::PROMOTED_R7/_R8/_R9/_R10); after round 8 every
-# oracle-backed query has been driver-graded at least once, so
-# rotations now cycle the stable pool for freshness.
-_DEFERRED = tuple(
-    n
-    for n in (
-        _ROTATED_OUT
-        + _ROTATED_OUT_R7
-        + _ROTATED_OUT_R8
-        + (
-            "regex_text_ops",
-            "split_explode_keys",
-        )
-        + _ROTATED_OUT_R9
-        + _ROTATED_OUT_R10
-    )
-    if n not in _PROMOTED_R9 and n not in _PROMOTED_R10
-)
-
 
 
 def load_all() -> None:
     """Import every plans module so registrations run, then order the
-    registry: oracle-backed queries outside _DEFERRED first (exactly the
-    50 graded slots), the deferred oracle-backed next, rows-only queries
-    last."""
+    registry: the 50 _GRADED queries first, the other oracle-backed
+    queries next, rows-only queries last."""
     from eligibility_etl_airflow_spark.plans import (  # noqa: F401
         eligibility,
         relational,
@@ -396,9 +129,7 @@ def load_all() -> None:
     )
 
     def rank(name: str) -> int:
-        if name in _DEFERRED:
-            return 1
-        return 0 if name in ORACLES else 2
+        return 0 if name in _GRADED else 1 if name in ORACLES else 2
 
     ordered = sorted(QUERIES, key=rank)  # stable: keeps import order per rank
     reordered = {name: QUERIES[name] for name in ordered}

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession

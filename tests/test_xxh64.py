@@ -1,9 +1,9 @@
 """Bit-identity of the vectorized numpy XXH64 against Spark's xxhash64.
 
-The minhash shingle stage's correctness rides entirely on
+The winnowing stage's correctness rides entirely on
 operators/xxh64.py producing the SAME 64-bit value as the JVM
 ``xxhash64(string)`` for every gram — one differing bit silently changes
-signatures, bands, and every downstream pair set. The corpus here walks
+fingerprints and every downstream pair set. The corpus here walks
 every byte length 0..70 (covering the stripe loop, the 8-byte word
 loop, the 4-byte word and the byte tail, and all their combinations),
 plus multi-byte UTF-8, supplementary-plane chars and 0x00/0xFF fills.
@@ -79,6 +79,13 @@ def test_xxh64_u8mat_empty_and_zero_rows():
     assert xxh64_u8mat(np.empty((0, 5), dtype=np.uint8)).shape == (0,)
 
 
+@pytest.mark.parametrize("shape", [(5,), (2, 3, 4)])
+def test_xxh64_u8mat_rejects_non_matrix(shape):
+    # a 1-D input used to hash as n empty rows: plausible but wrong
+    with pytest.raises(ValueError, match="matrix"):
+        xxh64_u8mat(np.zeros(shape, dtype=np.uint8))
+
+
 def test_xxh64_seed_parameter(spark):
     """Spark's multi-column xxhash64 folds the running hash in as the
     next column's seed — which exercises the numpy implementation at an
@@ -92,8 +99,10 @@ def test_xxh64_seed_parameter(spark):
 
 
 @pytest.mark.parametrize("k", [3, 5])
-def test_hashed_shingle_stage_matches_expression(spark, k):
-    """The numpy shingle stage must equal the column-expression form
+def test_gram_hash_helpers_match_expression(spark, k):
+    """The driver-side gram hashing that ``_winnow_stage`` runs
+    (``_char_gram_offsets(clamp_short=True)`` + ``xxh64_slices``) with
+    first-occurrence dedup must equal the JVM ``hashed_shingles_of_norm``
     VALUE-FOR-VALUE AND ORDER-FOR-ORDER (array_distinct keeps first
     occurrence) on boundary docs incl. short/empty text and non-BMP."""
     from eligibility_etl_airflow_spark.operators import neardup
@@ -114,12 +123,17 @@ def test_hashed_shingle_stage_matches_expression(spark, k):
         [(i, s) for i, s in enumerate(cases)], "doc_id long, text string"
     )
     staged = neardup._with_normalized_text(df, "doc_id", "text")
-    new = neardup._hashed_shingle_stage(staged, k)
-    old = staged.select(
-        "id", neardup.hashed_shingles_of_norm(F.col("_norm"), k).alias("shingles")
-    )
-    assert new.exceptAll(old).count() == 0
-    assert old.exceptAll(new).count() == 0
+    rows = staged.select(
+        "id", "_norm", neardup.hashed_shingles_of_norm(F.col("_norm"), k).alias("jvm")
+    ).orderBy("id").collect()
+    assert len(rows) == len(cases)
+
+    flat, doc_starts = neardup._utf8_concat([r["_norm"] for r in rows])
+    starts, lens, didx = neardup._char_gram_offsets(flat, doc_starts, k)
+    hashes = xxh64_slices(flat, starts, lens)
+    for d, r in enumerate(rows):
+        mine = list(dict.fromkeys(int(h) for h in hashes[didx == d]))
+        assert mine == r["jvm"], f"doc {cases[d]!r}: {mine} != {r['jvm']}"
 
 
 def test_shingles_non_bmp_parity(spark):
