@@ -39,7 +39,7 @@ import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from eligibility_etl_airflow_spark.catalog import Catalog
@@ -125,6 +125,14 @@ class Dag:
         return results
 
 
+def _write_counted(df: DataFrame, path: str) -> int:
+    """Overwrite ``path`` with ``df`` and return the rows written,
+    observed during the write itself (one job, no read-back count)."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    return int(obs.get["n"])
+
+
 def eligibility_dag(spark: SparkSession, sf_dir: str, work_dir: str) -> Dag:
     """The reference eligibility DAG's task graph over engine primitives
     (extract/transform task bodies: dags/eligibilty_etl.py:72-251; load
@@ -140,8 +148,7 @@ def eligibility_dag(spark: SparkSession, sf_dir: str, work_dir: str) -> Dag:
         # to a run_id-named parquet for the same reason)
         c = Catalog(spark, sf_dir)
         df = c.customer.join(c.nation, c.customer.c_nationkey == c.nation.n_nationkey)
-        df.write.mode("overwrite").parquet(extract_path)
-        return {"path": extract_path, "rows": spark.read.parquet(extract_path).count()}
+        return {"path": extract_path, "rows": _write_counted(df, extract_path)}
 
     def transform_iqama(extract: dict) -> dict:
         # id-normalization branch (reference: transform_iqama)
@@ -151,8 +158,7 @@ def eligibility_dag(spark: SparkSession, sf_dir: str, work_dir: str) -> Dag:
             F.upper(F.trim(F.col("n_name"))).alias("nation"),
             F.regexp_replace(F.col("c_name"), r"[^0-9]", "").alias("member_digits"),
         )
-        out.write.mode("overwrite").parquet(out_iqama)
-        return {"path": out_iqama, "rows": spark.read.parquet(out_iqama).count()}
+        return {"path": out_iqama, "rows": _write_counted(out, out_iqama)}
 
     def transform_eligibility(extract: dict) -> dict:
         # eligibility-labeling branch (reference: transform_eligibility)
@@ -164,8 +170,7 @@ def eligibility_dag(spark: SparkSession, sf_dir: str, work_dir: str) -> Dag:
             .otherwise(F.lit("REVIEW"))
             .alias("eligibility_status"),
         )
-        out.write.mode("overwrite").parquet(out_elig)
-        return {"path": out_elig, "rows": spark.read.parquet(out_elig).count()}
+        return {"path": out_elig, "rows": _write_counted(out, out_elig)}
 
     def load(transform_iqama: dict, transform_eligibility: dict) -> dict:
         # quality gate before the sink (reference load_data validates

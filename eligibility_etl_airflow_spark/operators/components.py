@@ -36,20 +36,11 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from eligibility_etl_airflow_spark.sources.sinks import _stable
+
 
 class ConvergenceError(RuntimeError):
     """Raised when label propagation fails to converge within max_iter."""
-
-
-def _stable(df: DataFrame) -> DataFrame:
-    """Materialize + truncate lineage. Uses the reliable checkpoint dir
-    when the session has one (``spark.sparkContext.setCheckpointDir`` —
-    the right choice on a real cluster: survives executor loss), else an
-    eager localCheckpoint (fine on local[*] and short-lived jobs)."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
 
 
 def connected_components(

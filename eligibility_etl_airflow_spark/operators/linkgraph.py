@@ -88,7 +88,7 @@ def pagerank(
     ``checkpoint=True`` localCheckpoints each iteration — without it
     the lineage nests ``iterations`` deep and the final plan's
     compile/execute cost grows superlinearly (same rationale as
-    components._stable). Ranks round to ``round_dp`` per iteration so
+    sinks._stable). Ranks round to ``round_dp`` per iteration so
     double-sum ordering cannot leak into results across partitionings.
 
     Continuous-crawl refinements: ``init`` warm-starts from a previous

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from eligibility_etl_airflow_spark import registry
 from eligibility_etl_airflow_spark.sources import sinks
+from eligibility_etl_airflow_spark.sources.sinks import _stable
 
 
 def _query(name: str):
@@ -43,8 +44,9 @@ def run_eligibility_pipeline(
     """§3.1 lifecycle: extract + enrich (flagship plan) → quality gate →
     idempotent load → audit CSV copy. Raises QualityGateError (aborting
     the load, reference behavior at dags/eligibilty_etl.py:288-321) if
-    the invalid ratio breaches."""
-    df = _query("eligibility_flagship")(spark, sf_dir)
+    the invalid ratio breaches. The flagship plan runs once: the gate,
+    the append and the audit copy all read its materialized rows."""
+    df = _stable(_query("eligibility_flagship")(spark, sf_dir))
     gate = sinks.expect(
         df,
         F.col("status_name").isNull(),
@@ -73,11 +75,17 @@ def run_predictions_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> 
 def run_resubmission_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     """§3.2 lifecycle: two-branch union extract with latest-transaction
     window dedup → per-visit justification → MERGE upsert into the final
-    table (stage+MERGE of src/etl_utils.py:87-145, here a parquet MERGE)."""
+    table (stage+MERGE of src/etl_utils.py:87-145, here a parquet MERGE).
+    The keep-last order is total — ``request_date`` alone ties within a
+    service — so the kept row does not depend on partitioning."""
     df = _query("resubmission_flagship")(spark, sf_dir)
-    deduped = sinks.keep_last(df, ["service_id"], order_col="request_date")
-    sinks.merge_upsert(spark, os.path.join(out_dir, "resubmission"), deduped, ["service_id"])
-    return {"rows_upserted": deduped.count()}
+    deduped = sinks.keep_last(
+        df, ["service_id"], [F.col("request_date"), F.col("request_id"), F.col("sequence")]
+    )
+    n = sinks.merge_upsert(
+        spark, os.path.join(out_dir, "resubmission"), deduped, ["service_id"]
+    )
+    return {"rows_upserted": n}
 
 
 def run_events_stream_pipeline(
@@ -87,11 +95,21 @@ def run_events_stream_pipeline(
     watermark dedup → checkpointed idempotent foreachBatch parquet sink.
     Re-running with the same checkpoint is a no-op (no new input) — the
     streaming replacement for every cron-plus-overlap extraction in the
-    reference."""
+    reference.
+
+    The query runs on a clone of ``spark`` with one shuffle partition
+    per core (``defaultParallelism``), so the dedup state keeps one
+    state-store partition, and writes one set of checkpoint files per
+    micro-batch, per core. An existing checkpoint keeps the partition
+    count recorded in its offset log."""
     from eligibility_etl_airflow_spark.streaming import ops
 
     ckpt = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
-    stream = ops.dedup_under_watermark(ops.events_stream(spark, sf_dir))
+    stream_spark = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    stream_spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    stream = ops.dedup_under_watermark(ops.events_stream(stream_spark, sf_dir))
     ops.foreach_batch_parquet_sink(
         stream, os.path.join(out_dir, "events_clean"), ckpt, dedup_keys=["event_id"]
     )
@@ -672,7 +690,6 @@ def run_training_prep_pipeline(
     n_span_tokens_removed = None
     if span_dedup:
         from eligibility_etl_airflow_spark.operators import dedup as dedup_ops
-        from eligibility_etl_airflow_spark.operators.components import _stable
 
         # eager checkpoint: the stats aggregate below AND the chunking
         # join both consume this relation — without truncation the whole
@@ -902,7 +919,6 @@ def run_incremental_curation(
     from pyspark import StorageLevel
 
     from eligibility_etl_airflow_spark.operators import neardup, text
-    from eligibility_etl_airflow_spark.operators.components import _stable
 
     docs_path = os.path.join(state_dir, "accepted_docs")
     hash_path = os.path.join(state_dir, "index_hashes")
@@ -1855,7 +1871,6 @@ def run_incremental_crawl_ingest(
     from pyspark import StorageLevel
 
     from eligibility_etl_airflow_spark.operators import dedup, text, urls
-    from eligibility_etl_airflow_spark.operators.components import _stable
 
     if recrawl_policy not in ("skip", "update"):
         raise ValueError(
@@ -1888,11 +1903,8 @@ def run_incremental_crawl_ingest(
             import uuid
 
             from eligibility_etl_airflow_spark.operators import text as _text
-            from eligibility_etl_airflow_spark.operators.components import (
-                _stable as _stable_mig,
-            )
 
-            migrated = _stable_mig(
+            migrated = _stable(
                 spark.read.parquet(url_index)
                 .select("url_canonical", "doc_id")
                 .join(
@@ -2561,7 +2573,6 @@ def run_incremental_frontier(
     Extra ``frontier_kwargs`` pass through (robots_df, sitemaps_df,
     domain_quality_df, per_domain_budget, ...)."""
     from eligibility_etl_airflow_spark.operators import urls
-    from eligibility_etl_airflow_spark.operators.components import _stable
 
     edges_path = os.path.join(state_dir, "index_domain_edges")
     ranks_path = os.path.join(state_dir, "frontier_ranks")

@@ -36,7 +36,27 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+# the deterministic keep-last operator, importable from here because the
+# loads dedup before they upsert and the benchmark's tracer spans it by
+# this name
+from eligibility_etl_airflow_spark.operators.dedup import keep_last  # noqa: F401
+
+
+def _stable(df: DataFrame) -> DataFrame:
+    """Materialize + truncate lineage. Uses the reliable checkpoint dir
+    when the session has one (``spark.sparkContext.setCheckpointDir`` —
+    the right choice on a real cluster: survives executor loss), else an
+    eager localCheckpoint (fine on local[*] and short-lived jobs).
+
+    Unlike ``persist``, AQE may coalesce the plan's shuffle partitions
+    (a cached plan keeps all ``spark.sql.shuffle.partitions``), and no
+    later plan can match the copy, so a source file rewritten in place
+    is read fresh by the next call."""
+    sc = df.sparkSession.sparkContext
+    if sc.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
@@ -74,13 +94,18 @@ def merge_upsert(
     target_path: str,
     source: DataFrame,
     keys: list[str],
-) -> None:
+) -> int:
     """MERGE INTO over a parquet target: matched rows take the source
     version, unmatched target rows are kept, new source rows insert.
+    Returns the rows upserted (the source's row count).
 
     If the source carries duplicate keys the LAST occurrence per key wins
     only when an explicit ordering exists — so duplicates are rejected
     here (callers dedup with an order key first; SURVEY.md §7.8).
+
+    The source plan runs ONCE: it is materialized (``_stable``) up front,
+    and the duplicate-key check, the row count (one aggregate job for
+    both) and the staged write all read that copy.
 
     LOCAL-FILESYSTEM ONLY (same contract as ``compact_parquet``): the
     reader-visible flip is an ``os.rename`` directory swap, which has no
@@ -98,8 +123,14 @@ def merge_upsert(
             "format's MERGE INTO (Delta/Iceberg) or merge_upsert_jdbc on "
             "object stores"
         )
-    dup = source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-    if dup:
+    source = _stable(source)
+    stats = (
+        source.groupBy(*keys)
+        .count()
+        .agg(F.sum("count").alias("rows"), F.max("count").alias("max_per_key"))
+        .first()
+    )
+    if (stats["max_per_key"] or 0) > 1:
         raise ValueError(f"merge_upsert: source has duplicate keys on {keys}")
     if os.path.exists(target_path):
         target = spark.read.parquet(target_path)
@@ -117,6 +148,7 @@ def merge_upsert(
         shutil.rmtree(old)
     else:
         os.rename(tmp, target_path)
+    return stats["rows"] or 0
 
 
 def _sink_file_bytes(path: str) -> int:
@@ -210,7 +242,7 @@ def append_dedup(
     Spark's refresh-by-path, invalidating any cached plan whose lineage
     READS ``target_path`` — a later append whose input derives from this
     path would lazily recompute against the just-updated sink and write
-    nothing. Eagerly checkpoint (``components._stable``) every
+    nothing. Eagerly checkpoint (``_stable``) every
     to-append relation BEFORE the first write of the group;
     ``run_incremental_curation`` is the reference call site."""
     from pyspark.sql import Observation
@@ -298,18 +330,6 @@ def resume_filter_bloom(
     done = spark.read.parquet(sink_path).select(key)
     survivors = candidates.join(done, key, "left_anti")
     return definite_new.unionByName(survivors), sketch
-
-
-def keep_last(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
-    """Deterministic keep-last dedup: pandas ``drop_duplicates(keep='last')``
-    depends on row order (dags/eligibilty_etl.py:146); the engine demands
-    an explicit ordering column (SURVEY.md §7.8)."""
-    w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 class QualityGateError(ValueError):

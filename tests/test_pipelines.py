@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from eligibility_etl_airflow_spark import pipelines
@@ -61,6 +64,86 @@ def test_events_stream_pipeline_idempotent(spark, sf_dir, tmp_path):
     assert first["rows_in_sink"] > 0
     second = pipelines.run_events_stream_pipeline(spark, sf_dir, out)
     assert second["rows_in_sink"] == first["rows_in_sink"]
+
+
+def test_predictions_pipeline_reads_a_source_rewritten_in_place(spark, sf_dir, tmp_path):
+    """Two runs in one session over a lineitem file replaced in place
+    between them, with no clearCache: the second run loads the second
+    batch, LLM side included — no plan-level cache serves the first
+    batch's rows again (they share the file's root path)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    lines = pq.read_table(os.path.join(sf_dir, "lineitem.parquet"))
+    odd = pc.equal(pc.bit_wise_and(lines["l_orderkey"], 1), 1)
+    batches = [lines.filter(pc.invert(odd)), lines.filter(odd)]
+    src, out = tmp_path / "src", str(tmp_path / "out")
+    src.mkdir()
+    expected = set()
+    for batch in batches:
+        pq.write_table(batch, str(src / "lineitem.parquet"))
+        pipelines.run_predictions_pipeline(spark, str(src), out)
+        expected |= {
+            f"{p}:{s}:{n}"
+            for p, s, n in zip(
+                batch["l_partkey"].to_pylist(),
+                batch["l_suppkey"].to_pylist(),
+                batch["l_linenumber"].to_pylist(),
+            )
+        }
+    loaded = spark.read.parquet(f"{out}/predictions").select("service_uid").collect()
+    assert {r.service_uid for r in loaded} == expected
+
+
+def _offset_conf(ckpt: str, batch_id: int) -> dict:
+    """The SQL conf a streaming checkpoint recorded for a micro-batch."""
+    with open(os.path.join(ckpt, "offsets", str(batch_id))) as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def test_events_stream_state_is_sized_to_the_cores(spark, sf_dir, tmp_path):
+    out = str(tmp_path)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    pipelines.run_events_stream_pipeline(spark, sf_dir, out)
+    conf = _offset_conf(os.path.join(out, "_checkpoint"), 0)
+    assert conf["spark.sql.shuffle.partitions"] == str(spark.sparkContext.defaultParallelism)
+    # the caller's session keeps its own setting
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_events_stream_restart_keeps_the_checkpoints_partitions(spark, sf_dir, tmp_path):
+    """A checkpoint created at 32 shuffle partitions restarts with 32 and
+    stays idempotent."""
+    import pyarrow.parquet as pq
+
+    from eligibility_etl_airflow_spark.streaming import ops
+
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet")).sort_by("ts")
+    half = events.num_rows // 2
+    src = tmp_path / "src"
+    (src / "events.parquet").mkdir(parents=True)
+    pq.write_table(events.slice(0, half), str(src / "events.parquet" / "part-0.parquet"))
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    sink = os.path.join(out, "events_clean")
+
+    old = spark.newSession()
+    old.conf.set("spark.sql.shuffle.partitions", "32")
+    stream = ops.dedup_under_watermark(ops.events_stream(old, str(src)))
+    ops.foreach_batch_parquet_sink(stream, sink, ckpt, dedup_keys=["event_id"])
+    n_first = spark.read.parquet(sink).count()
+    assert _offset_conf(ckpt, 0)["spark.sql.shuffle.partitions"] == "32"
+
+    assert pipelines.run_events_stream_pipeline(spark, str(src), out, ckpt) == {
+        "rows_in_sink": n_first
+    }
+    # the next arrival runs as a new micro-batch under the recorded count
+    pq.write_table(events.slice(half), str(src / "events.parquet" / "part-1.parquet"))
+    second = pipelines.run_events_stream_pipeline(spark, str(src), out, ckpt)
+    assert _offset_conf(ckpt, 1)["spark.sql.shuffle.partitions"] == "32"
+    state_parts = [d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()]
+    assert len(state_parts) == 32
+    assert second["rows_in_sink"] > n_first
+    assert pipelines.run_events_stream_pipeline(spark, str(src), out, ckpt) == second
 
 
 def test_corpus_curation_pipeline(spark, sf_dir, tmp_path):

@@ -84,12 +84,6 @@ def test_resume_filter_skips_processed(spark, target):
     assert sinks.resume_filter(incoming, spark, target + "_missing", ["k"]).count() == 3
 
 
-def test_keep_last_requires_explicit_order(spark):
-    df = _df(spark, [(1, "old", 1), (1, "new", 2), (2, "only", 1)])
-    got = {r.k: r.v for r in sinks.keep_last(df, ["k"], "ord").collect()}
-    assert got == {1: "new", 2: "only"}
-
-
 def test_expect_passes_and_raises(spark):
     ok = _df(spark, [(1, "a", 1), (2, None, 1), (3, "c", 1), (4, "d", 1)])
     res = sinks.expect(ok, F.col("v").isNull(), max_invalid_ratio=0.5)
