@@ -6,8 +6,9 @@ tests/test_plan_shape.py for the built-in queries; this module exposes
 the same checks to users composing their OWN plans from the operators,
 so "would this survive 100 TB" is a function call, not a code review.
 
-Everything reads the *executed* plan string — the physical plan after
-AQE planning, which is what actually runs.
+The plan checks read the *executed* plan string — the physical plan
+after AQE planning, which is what actually runs. ``codegen_stats`` reads
+the JVM's code-generation counters.
 """
 
 from __future__ import annotations
@@ -80,3 +81,19 @@ def assert_scale_discipline(
             f"{max_exchanges} — check join strategies and aggregations"
         )
     return s
+
+
+def codegen_stats(spark) -> dict:
+    """Classes compiled so far by this JVM's whole-stage and expression
+    code generator, and the time spent compiling them.
+
+    ``{"classes": int, "compile_ms": float}``. Read through py4j from
+    Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME`` histogram; no
+    Spark job runs. The histogram is updated once per compile, i.e. per
+    miss of the codegen cache, so the difference of ``classes`` across a
+    block of work is exactly the number of classes it compiled.
+    ``compile_ms`` is approximate: it is the histogram's count times the
+    mean of its sampling reservoir, not a running sum."""
+    hist = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n = int(hist.getCount())
+    return {"classes": n, "compile_ms": n * float(hist.getSnapshot().getMean())}

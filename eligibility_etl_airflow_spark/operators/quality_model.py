@@ -7,22 +7,21 @@ heuristic teacher) into a linear model cheap enough to score 100 TB.
 
 Spark-first split of the work:
 
-- **featurization is relational and stays JVM-side**: tokens (the shared
-  ``tokens_of`` definition) → hashing trick ``pmod(xxhash64(tok), dim)``
-  → per-(doc, bucket) counts. One explode + one partial-agg — the exact
-  shape of the graded TF-IDF query. Hashing on the JVM in BOTH the
-  training and scoring paths means the model file never depends on a
-  Python hash implementation.
+- **featurization is the hashing trick**: tokens (the shared
+  ``tokens_of`` definition, JVM-side) → ``pmod(xxhash64(tok), dim)``
+  → per-(doc, bucket) log1p counts. Scoring hashes on the JVM; training
+  hashes the sample's JVM tokens on the driver with the bit-exact
+  xxhash64 twin (operators/xxh64), so both paths bucket identically and
+  the model file never depends on a Python hash implementation.
 - **training solves on a bounded, layout-stable sample**: the featurized
   sample (``sample_size`` × ``dim`` dense matrix, a few MB) is collected
   via the md5-ranked discipline of ``assign_split`` and fitted with
   deterministic full-batch gradient descent + L2 on the driver. The
   corpus never reaches the driver; sample_size bounds the transfer.
-- **scoring is pure column arithmetic**: the learned (bucket, weight)
-  relation joins the exploded token buckets (broadcast — ``dim`` rows by
-  construction), one partial-agg sum per doc, then the sigmoid. No UDF
-  of any kind in the scoring path; at 100 TB this is a map-side-combine
-  aggregate over the token stream.
+- **scoring is pure column arithmetic**: each doc's sorted token
+  buckets fold against the weight vector shipped as one array literal,
+  then the sigmoid. No UDF and no shuffle in the scoring path; at
+  100 TB it is a map-only pass over the token stream.
 """
 
 from __future__ import annotations
@@ -35,6 +34,15 @@ from eligibility_etl_airflow_spark.operators.tokenize import tokens_of
 
 def _bucket_of(tok: Column, dim: int) -> Column:
     return F.pmod(F.xxhash64(tok), F.lit(dim)).cast("int")
+
+
+def _padded_text(text: Column) -> Column:
+    """Lowercased text with whitespace runs folded to '_' and '_'
+    sentinels at both ends, so word boundaries take part in the char
+    n-grams of the language-ID feature space."""
+    return F.concat(
+        F.lit("_"), F.regexp_replace(F.lower(text), r"\s+", "_"), F.lit("_")
+    )
 
 
 def _lit_double_array(values) -> Column:
@@ -112,8 +120,9 @@ def _np_bucket_counts(chunks, doc_idx_chunks, n_docs: int, dim: int):
 
 
 def _np_token_features(token_lists, dim: int):
-    """(n_docs × dim) log1p bucket counts from per-doc token arrays
-    (the ``hashed_token_features`` featurization, driver-side)."""
+    """(n_docs × dim) log1p bucket counts from per-doc token arrays:
+    the scorer's ``pmod(xxhash64(token), dim)`` buckets, counted on the
+    driver."""
     import numpy as np
 
     all_toks: list[bytes] = []
@@ -135,9 +144,9 @@ def _np_token_features(token_lists, dim: int):
 
 def _np_chargram_features(padded_texts, dim: int, n: int):
     """(n_docs × dim) log1p bucket counts from per-doc padded strings
-    under the char-n-gram featurization (``hashed_char_features``,
-    driver-side). Null/short (<n chars) docs yield all-zero rows —
-    the extractor's ``otherwise(empty array)`` rule."""
+    (``_padded_text``) under :func:`score_softmax`'s char-n-gram
+    buckets, counted on the driver. Null/short (<n chars) docs yield
+    all-zero rows — the extractor's ``otherwise(empty array)`` rule."""
     import numpy as np
 
     from eligibility_etl_airflow_spark.operators.neardup import (
@@ -152,23 +161,6 @@ def _np_chargram_features(padded_texts, dim: int, n: int):
     # (they are already "" here, shorter than any n >= 1)
     return _np_bucket_counts(
         [(flat, starts, lens)], [didx], len(texts), dim
-    )
-
-
-def hashed_token_features(
-    df: DataFrame, id_col: str, text_col: str, dim: int = 1024
-) -> DataFrame:
-    """(id, bucket, cnt) sparse hashed bag-of-words. The token array is
-    staged as its own projection alias (re-evaluation discipline) and
-    the count is one partial-aggregatable groupBy."""
-    staged = df.select(
-        F.col(id_col).alias("id"), tokens_of(F.col(text_col)).alias("tk")
-    )
-    return (
-        staged.select("id", F.explode("tk").alias("tok"))
-        .select("id", _bucket_of(F.col("tok"), dim).alias("bucket"))
-        .groupBy("id", "bucket")
-        .agg(F.count(F.lit(1)).cast("double").alias("cnt"))
     )
 
 
@@ -335,41 +327,6 @@ def score_quality(
 # Multi-class generalization: learned language ID over hashed char-n-grams
 # --------------------------------------------------------------------------
 
-def hashed_char_features(
-    df: DataFrame, id_col: str, text_col: str, dim: int = 2048, n: int = 3
-) -> DataFrame:
-    """(id, bucket, cnt) sparse hashed bag of character n-grams — the
-    language-ID feature space (word features generalize poorly across
-    morphology; char n-grams are the published standard, e.g. the
-    fastText/langid.py families). Text is lowercased with whitespace
-    runs folded to '_' and '_' sentinels added at both ends, so word
-    boundaries participate in the grams. Stays JVM-side: the padded
-    string and the gram array are staged projection aliases
-    (re-evaluation discipline), F.substr peels each gram, one
-    partial-agg groupBy counts buckets."""
-    padded = F.concat(
-        F.lit("_"),
-        F.regexp_replace(F.lower(F.col(text_col)), r"\s+", "_"),
-        F.lit("_"),
-    )
-    staged = df.select(F.col(id_col).alias("id"), padded.alias("_s"))
-    # one-regex-pass gram extraction (r10): zero-width lookahead capture
-    # emits every char n-gram in a single engine scan vs two interpreted
-    # expressions per position — identical strings in identical order.
-    # r11: consuming dot so non-BMP chars advance one code POINT per
-    # match (the surrogate-advance fix; see hashed_shingles_of_norm)
-    grams = F.when(
-        F.length("_s") >= n,
-        F.regexp_extract_all(F.col("_s"), F.lit("(?s)(?=(" + "." * n + "))."), F.lit(1)),
-    ).otherwise(F.array().cast("array<string>"))
-    return (
-        staged.select("id", F.explode(grams).alias("g"))
-        .select("id", _bucket_of(F.col("g"), dim).alias("bucket"))
-        .groupBy("id", "bucket")
-        .agg(F.count(F.lit(1)).cast("double").alias("cnt"))
-    )
-
-
 def train_softmax_classifier(
     df: DataFrame,
     id_col: str,
@@ -431,18 +388,13 @@ def train_softmax_classifier(
         _isin_literal(F.col("id"), [r["id"] for r in sample_id_rows])
     )
     # ONE Arrow collect of the sample's (padded text, y); the padded
-    # expression is EXACTLY hashed_char_features' (same JVM lower +
-    # whitespace fold), gram slicing + bucketing + counting move to the
-    # driver against the bit-exact xxhash64 twin — see the r11 note on
+    # expression is the scorer's (same JVM lower + whitespace fold),
+    # gram slicing + bucketing + counting move to the driver against
+    # the bit-exact xxhash64 twin — see the r11 note on
     # train_quality_classifier. orderBy pins the float-summation order
     # of the gradient; bit-determinism needs order, not just membership.
-    padded = F.concat(
-        F.lit("_"),
-        F.regexp_replace(F.lower(F.col("text")), r"\s+", "_"),
-        F.lit("_"),
-    )
     pdf = (
-        sample.select("id", padded.alias("_s"), "y")
+        sample.select("id", _padded_text(F.col("text")).alias("_s"), "y")
         .orderBy("id")
         .select("_s", "y")
         .toPandas()
@@ -515,18 +467,16 @@ def score_softmax(
     bias = [float(x) for x in model["bias"]]
     K = len(classes)
 
-    # padded-string + gram expressions mirror hashed_char_features
-    # exactly (same JVM hash at train and score time)
-    padded = F.concat(
-        F.lit("_"),
-        F.regexp_replace(F.lower(F.col(text_col)), r"\s+", "_"),
-        F.lit("_"),
-    )
+    # the trainer featurizes the same padded string (same JVM hash at
+    # train and score time)
     staged = ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), padded.alias("_s"))
+        df.select(F.col(id_col).alias("id"), _padded_text(F.col(text_col)).alias("_s"))
     )
-    # one-regex-pass gram extraction — mirrors hashed_char_features
-    # exactly (incl. the r11 consuming-dot non-BMP fix)
+    # one-regex-pass gram extraction (r10): zero-width lookahead capture
+    # emits every char n-gram in a single engine scan — identical
+    # strings in identical order to peeling each position. r11:
+    # consuming dot so non-BMP chars advance one code POINT per match
+    # (the surrogate-advance fix; see hashed_shingles_of_norm)
     grams = F.when(
         F.length("_s") >= n,
         F.regexp_extract_all(F.col("_s"), F.lit("(?s)(?=(" + "." * n + "))."), F.lit(1)),

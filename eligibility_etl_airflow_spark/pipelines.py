@@ -101,7 +101,12 @@ def run_events_stream_pipeline(
     per core (``defaultParallelism``), so the dedup state keeps one
     state-store partition, and writes one set of checkpoint files per
     micro-batch, per core. An existing checkpoint keeps the partition
-    count recorded in its offset log."""
+    count recorded in its offset log. The clone also runs no micro-batch
+    without new data: such a batch would only advance the watermark, yet
+    commit state for every partition and write an empty ``batch_id=N``
+    directory. The dedup emits a row when it first arrives, so output
+    is unchanged; evicting expired state moves to the next data batch,
+    which sees the same watermark."""
     from eligibility_etl_airflow_spark.streaming import ops
 
     ckpt = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
@@ -109,6 +114,7 @@ def run_events_stream_pipeline(
     stream_spark.conf.set(
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
     )
+    stream_spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     stream = ops.dedup_under_watermark(ops.events_stream(stream_spark, sf_dir))
     ops.foreach_batch_parquet_sink(
         stream, os.path.join(out_dir, "events_clean"), ckpt, dedup_keys=["event_id"]

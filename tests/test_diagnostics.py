@@ -1,6 +1,8 @@
 """Plan-audit API tests: summaries count what they claim, the
 discipline assert fires on row-Python and shuffle-budget violations and
-passes on the engine's own flagship plan."""
+passes on the engine's own flagship plan. Codegen counters: a new query
+compiles classes, and a re-run of the claims queries compiles almost
+none."""
 
 from __future__ import annotations
 
@@ -64,3 +66,65 @@ def test_pushed_filter_scans_counted(spark, sf_dir):
     df = Catalog(spark, sf_dir).orders.filter(F.col("o_orderkey") == 7).select("o_orderkey")
     s = diagnostics.plan_summary(df)
     assert s.scans >= 1 and s.pushed_filter_scans >= 1
+
+
+# Registered claims queries re-run on a schedule; together they need
+# more generated classes than Spark's default codegen cache (100) holds.
+_CLAIMS_QUERIES = (
+    "eligibility_flagship",
+    "eligibility_quality_gate",
+    "resubmission_flagship",
+    "business_rule_updates",
+    "latest_order_dense_rank",
+    "json_field_extract",
+    "cohort_retention",
+    "rolling_zscore_anomalies",
+    "asof_join_events",
+    "scd2_user_status",
+    "stream_dedup_overlap",
+    "beneficiary_enrichment",
+)
+
+
+def _empty_codegen_cache(spark) -> None:
+    """Drop every compiled class from the JVM's codegen cache, so the
+    next pass compiles from cold whatever ran earlier in this session."""
+    jvm, gw = spark.sparkContext._jvm, spark.sparkContext._gateway
+    cls = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    getter = cls.getDeclaredMethod("cache", gw.new_array(jvm.java.lang.Class, 0))
+    getter.setAccessible(True)
+    getter.invoke(cls.getField("MODULE$").get(None), gw.new_array(jvm.java.lang.Object, 0)).invalidateAll()
+
+
+def test_codegen_stats_counts_a_new_query(spark):
+    _empty_codegen_cache(spark)
+    before = diagnostics.codegen_stats(spark)
+    spark.range(0, 50).select(
+        (F.col("id") * 7919 + 104729).alias("x"), (F.col("id") % 13).alias("k")
+    ).groupBy("k").agg(F.max("x").alias("m")).collect()
+    after = diagnostics.codegen_stats(spark)
+    assert after["classes"] > before["classes"]
+    assert after["compile_ms"] >= 0.0
+
+
+def test_claims_queries_rerun_reuses_compiled_classes(spark, sf_dir):
+    """The session's codegen cache holds the claims queries' working
+    set: a second pass compiles at most a tenth of what the first did.
+    With Spark's default 100-entry cache the second pass recompiles most
+    of the first's classes."""
+
+    def compiled_by_one_pass() -> int:
+        before = diagnostics.codegen_stats(spark)["classes"]
+        for name in _CLAIMS_QUERIES:
+            spark.catalog.clearCache()
+            registry.reset_memos()
+            registry.QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return diagnostics.codegen_stats(spark)["classes"] - before
+
+    _empty_codegen_cache(spark)
+    first = compiled_by_one_pass()
+    second = compiled_by_one_pass()
+    assert first > 100
+    assert second <= 0.1 * first, (first, second)

@@ -146,6 +146,26 @@ def test_events_stream_restart_keeps_the_checkpoints_partitions(spark, sf_dir, t
     assert pipelines.run_events_stream_pipeline(spark, str(src), out, ckpt) == second
 
 
+def test_events_stream_writes_only_micro_batches_with_data(spark, sf_dir, tmp_path):
+    """Two deliveries run two micro-batches, and each writes rows: no
+    batch runs only to advance the watermark, which would commit state
+    and write an empty ``batch_id=N`` directory."""
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet")).sort_by("ts")
+    half = events.num_rows // 2
+    src = tmp_path / "src"
+    (src / "events.parquet").mkdir(parents=True)
+    out = str(tmp_path / "out")
+    for i, part in enumerate((events.slice(0, half), events.slice(half))):
+        pq.write_table(part, str(src / "events.parquet" / f"part-{i}.parquet"))
+        pipelines.run_events_stream_pipeline(spark, str(src), out)
+    sink = os.path.join(out, "events_clean")
+    dirs = {int(d.split("=")[1]) for d in os.listdir(sink) if d.startswith("batch_id=")}
+    with_rows = {r.batch_id for r in spark.read.parquet(sink).select("batch_id").distinct().collect()}
+    assert dirs == with_rows == {0, 1}
+
+
 def test_corpus_curation_pipeline(spark, sf_dir, tmp_path):
     from eligibility_etl_airflow_spark import pipelines
 

@@ -382,13 +382,52 @@ def test_isin_literal_fast_path_matches_fallback(spark, monkeypatch):
     assert fast == slow == vals
 
 
+def hashed_token_features(df, id_col: str, text_col: str, dim: int = 1024):
+    """Reference: (id, bucket, cnt) sparse hashed bag-of-words, built on
+    the JVM — one explode + one partial-aggregatable groupBy."""
+    from eligibility_etl_airflow_spark.operators.quality_model import _bucket_of
+    from eligibility_etl_airflow_spark.operators.tokenize import tokens_of
+
+    staged = df.select(F.col(id_col).alias("id"), tokens_of(F.col(text_col)).alias("tk"))
+    return (
+        staged.select("id", F.explode("tk").alias("tok"))
+        .select("id", _bucket_of(F.col("tok"), dim).alias("bucket"))
+        .groupBy("id", "bucket")
+        .agg(F.count(F.lit(1)).cast("double").alias("cnt"))
+    )
+
+
+def hashed_char_features(df, id_col: str, text_col: str, dim: int = 2048, n: int = 3):
+    """Reference: (id, bucket, cnt) sparse hashed bag of character
+    n-grams, built on the JVM. Text is lowercased with whitespace runs
+    folded to '_' and '_' sentinels added at both ends; a zero-width
+    lookahead capture emits every gram in one regex pass."""
+    from eligibility_etl_airflow_spark.operators.quality_model import _bucket_of
+
+    padded = F.concat(
+        F.lit("_"),
+        F.regexp_replace(F.lower(F.col(text_col)), r"\s+", "_"),
+        F.lit("_"),
+    )
+    staged = df.select(F.col(id_col).alias("id"), padded.alias("_s"))
+    grams = F.when(
+        F.length("_s") >= n,
+        F.regexp_extract_all(F.col("_s"), F.lit("(?s)(?=(" + "." * n + "))."), F.lit(1)),
+    ).otherwise(F.array().cast("array<string>"))
+    return (
+        staged.select("id", F.explode(grams).alias("g"))
+        .select("id", _bucket_of(F.col("g"), dim).alias("bucket"))
+        .groupBy("id", "bucket")
+        .agg(F.count(F.lit(1)).cast("double").alias("cnt"))
+    )
+
+
 def test_np_featurizers_match_distributed(spark):
     """The r11 driver-side numpy featurizers must reproduce the
     distributed featurization relations exactly — same buckets (bit-
     exact xxhash64 twin + floor-mod pmod), same log1p counts, zero rows
     for token-less / short / null docs."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from eligibility_etl_airflow_spark.operators import quality_model as qm
     from eligibility_etl_airflow_spark.operators.tokenize import tokens_of
@@ -406,8 +445,8 @@ def test_np_featurizers_match_distributed(spark):
         [(i, s) for i, s in enumerate(cases)], "id long, text string"
     )
     for dim, builder, feats_fn in (
-        (64, "tokens", qm.hashed_token_features),
-        (128, "chargrams", qm.hashed_char_features),
+        (64, "tokens", hashed_token_features),
+        (128, "chargrams", hashed_char_features),
     ):
         feats = feats_fn(df, "id", "text", dim)
         want = np.zeros((len(cases), dim))
