@@ -435,3 +435,75 @@ def batch_content_key(*relations: tuple[str, DataFrame]) -> str:
         ).first()
         parts.append(f"{tag}:{row['n']}:{row['h']}")
     return "|".join(parts)
+
+
+def token_index_prepare(
+    spark,
+    index_path: str,
+    docs_path: str,
+    accepted: DataFrame | None,
+    drift_report: bool,
+    backfill: bool,
+    kinds: tuple[str, ...] = ("acc",),
+) -> tuple[bool, dict | None]:
+    """A continuous pipeline's per-batch token-index step, run BEFORE
+    any of the batch's state writes: recovery fold → one-time backfill
+    → batch counts → JSD → write-ahead intent.
+
+    The index is maintained whenever it exists, has a pending intent,
+    or ``drift_report`` is on — so a later flag-off call cannot let it
+    go stale. Recovery first: a prior run that crashed between a state
+    write and its fold left a ``__pending_<kind>`` intent, folded now
+    for each of ``kinds`` (only if that mutation reached ``docs_path``;
+    a mid-swap crash discards it and falls through to the backfill) so
+    the index is caught up BEFORE this batch's JSD reads it. A state
+    without an index is backfilled ONCE from its stored text when
+    ``backfill`` holds (the only O(corpus) token pass the index ever
+    costs; staged write + rename). ``accepted`` (doc_id, text[,
+    content_hash], or None when the batch accepted nothing) is then
+    counted; with ``drift_report`` its unigram JSD against the
+    PRE-append index is computed — O(batch + vocab), accepted text
+    never re-read — and its counts are staged as the ``acc`` intent, so
+    a crash between the caller's writes and its fold stays recoverable.
+
+    Returns ``(maintained, drift_row)``: when maintained, the caller
+    folds each kind (:func:`token_index_fold`) after its writes land;
+    ``drift_row`` is the :func:`js_divergence_counts` row or None."""
+    import os
+    import uuid
+
+    from eligibility_etl_airflow_spark.sources.sinks import _stable
+
+    if not (
+        drift_report
+        or os.path.exists(index_path)
+        or token_index_has_pending(index_path)
+    ):
+        return False, None
+    for kind in kinds:
+        token_index_fold(
+            spark, index_path, docs_path=docs_path, verify_landed=True, kind=kind
+        )
+    if backfill and not os.path.exists(index_path):
+        tmp = f"{index_path}__backfill_{uuid.uuid4().hex[:8]}"
+        unigram_counts(spark.read.parquet(docs_path).select("text")).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        os.rename(tmp, index_path)
+    drift_row = None
+    if accepted is not None:
+        counts = _stable(unigram_counts(accepted.select("text")))
+        if drift_report and os.path.exists(index_path):
+            drift_row = (
+                js_divergence_counts(counts, spark.read.parquet(index_path))
+                .collect()[0]
+                .asDict()
+            )
+        token_index_pending_write(
+            index_path,
+            batch_content_key(("acc", accepted)),
+            add=counts,
+            ids=accepted.select("doc_id"),
+            kind="acc",
+        )
+    return True, drift_row

@@ -14,13 +14,17 @@ depends on the orchestrator.
 
 Each run returns a small dict of metrics (row counts, gate stats,
 appended rows) — the engine-level replacement for the reference's log
-lines and XCom record counts.
+lines and XCom record counts. The curation and crawl funnels run every
+stage through one :class:`_Funnel`, which caches, counts and releases
+each stage's output.
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +36,198 @@ from eligibility_etl_airflow_spark.sources.sinks import _stable
 def _query(name: str):
     registry.load_all()
     return registry.QUERIES[name]
+
+
+class _Funnel:
+    """The stage chain of a curation or crawl funnel.
+
+    Persist before count: a stage's output is persisted
+    (``MEMORY_AND_DISK``) BEFORE its count, so the count materializes
+    the cache and every later consumer — the next stage, a keeper
+    aggregate, an audit anti-join, the final write — reads the cache
+    instead of re-running the lineage back to the source scan. The
+    counts are aggregates only; nothing data-proportional reaches the
+    driver. Every cache taken here is released on exit, on success and
+    on error.
+
+    ``stats`` collects the named counts, ``snapshots`` the
+    ``(stage, relation)`` sequence :func:`_snapshot_drops` attributes
+    dropped rows from."""
+
+    def __init__(self) -> None:
+        self.stats: dict = {}
+        self.snapshots: list[tuple[str, DataFrame]] = []
+        self._caches: list[DataFrame] = []
+
+    def __enter__(self) -> _Funnel:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in self._caches:
+            df.unpersist()
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` until exit (a relation already cached is
+        returned as is, and left to its owner)."""
+        if df.is_cached:
+            return df
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._caches.append(df)
+        return df
+
+    def stage(
+        self, df: DataFrame, stat: str | None = None, snapshot: str | None = None
+    ) -> DataFrame:
+        """Cache a stage's output; count it into ``stats[stat]`` and
+        record it as snapshot ``snapshot`` when those are named."""
+        df = self.cache(df)
+        if stat is not None:
+            self.stats[stat] = df.count()
+        if snapshot is not None:
+            self.snapshots.append((snapshot, df))
+        return df
+
+
+def _snapshot_drops(snapshots: list[tuple[str, DataFrame]], label: str) -> DataFrame:
+    """One row per ``doc_id`` present in a snapshot but missing from the
+    next, with ``label`` naming the stage that dropped it — the
+    curation audit trail and the crawl quarantine. Each snapshot carries
+    the columns the output keeps; the first-dropping stage wins, so the
+    drops and the last snapshot partition the first."""
+    return reduce(
+        DataFrame.unionByName,
+        [
+            prev.join(cur.select("doc_id"), "doc_id", "left_anti").withColumn(
+                label, F.lit(name)
+            )
+            for (_, prev), (name, cur) in zip(snapshots, snapshots[1:])
+        ],
+    )
+
+
+def _blocklist_gate(
+    df: DataFrame, id_col: str, terms: tuple[str, ...], max_fraction: float
+) -> DataFrame:
+    """The C4 "bad words" stage (operators/text.py::blocklist_metrics):
+    one map-only regexp pass; the DROP side is selected so null-text
+    docs (keep=True by contract) survive."""
+    from eligibility_etl_airflow_spark.operators import text
+
+    drop_ids = (
+        text.blocklist_metrics(
+            df, id_col, "text", terms=terms, max_fraction=max_fraction
+        )
+        .filter(~F.col("keep"))
+        .select(id_col)
+    )
+    return df.join(drop_ids, id_col, "left_anti")
+
+
+def _script_gate(df: DataFrame, id_col: str, min_latin_fraction: float) -> DataFrame:
+    """Docs whose Latin character fraction falls below
+    ``min_latin_fraction`` drop (the mixed-script net)."""
+    from eligibility_etl_airflow_spark.operators import text
+
+    ok = df.select(id_col, *text.script_profile(F.col("text"))).filter(
+        F.col("frac_latin") >= min_latin_fraction
+    )
+    return df.join(ok.select(id_col), id_col, "left_semi")
+
+
+def _robots_admitted(
+    df: DataFrame,
+    url_col: str,
+    robots_df: DataFrame,
+    domain_col: str,
+    text_col: str,
+    agent: str,
+    key: str,
+) -> DataFrame:
+    """Rows of ``df`` whose URL the site's robots.txt allows ``agent`` to
+    fetch (operators/robots.py); sites without a robots row allow all."""
+    from eligibility_etl_airflow_spark.operators import robots
+
+    rules = robots.robots_rules(robots_df, domain_col, text_col, agent=agent)
+    return (
+        robots.robots_allowed(df, url_col, rules, key=key)
+        .filter(F.col("crawl_allowed"))
+        .drop("crawl_allowed", "matched_pattern")
+    )
+
+
+def _url_deduped(
+    df: DataFrame, url_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """URL canonicalization (operators/urls.py) then URL-level exact
+    dedup: returns ``(with_url, deduped)`` — malformed URLs (canonical
+    NULL) dropped, then the min-id record kept per canonical form."""
+    from eligibility_etl_airflow_spark.operators import urls
+
+    with_url = urls.url_components(df, url_col).filter(
+        F.col("url_canonical").isNotNull()
+    )
+    keeper = (
+        with_url.groupBy("url_canonical")
+        .agg(F.min(id_col).alias(id_col))
+        .select(id_col)
+    )
+    return with_url, with_url.join(keeper, id_col, "left_semi")
+
+
+def _clean_html(
+    funnel: _Funnel,
+    df: DataFrame,
+    id_col: str,
+    html_col: str,
+    line_max_df: int,
+    nfc: bool,
+) -> DataFrame:
+    """HTML → text (newline-preserving) → line-level boilerplate removal
+    (dedup.line_dedup: lines shared by >= ``line_max_df`` docs of ``df``
+    drop, docs left empty drop) → optional Unicode NFC. Output is
+    (id, url_canonical, domain, text)."""
+    from eligibility_etl_airflow_spark.operators import dedup, text
+
+    # cached: line_dedup consumes its input through TWO physical
+    # subtrees (the line-frequency aggregate and the join probe), so
+    # without the cache the strip_html regexp chain — the dominant map
+    # cost at crawl scale — would execute twice
+    texted = funnel.cache(
+        df.select(
+            id_col,
+            "url_canonical",
+            F.col("url_domain").alias("domain"),
+            text.strip_html(F.col(html_col), collapse_ws=False).alias("text"),
+        )
+    )
+    lined = dedup.line_dedup(texted, id_col, "text", max_line_df=line_max_df)
+    cleaned = (
+        texted.drop("text")
+        .join(lined.select(id_col, "text_clean"), id_col)
+        .filter(F.trim(F.col("text_clean")) != "")
+        .withColumnRenamed("text_clean", "text")
+    )
+    if nfc:
+        cleaned = cleaned.withColumn("text", text.unicode_nfc(F.col("text")))
+    return cleaned
+
+
+def _documents_table(df: DataFrame, id_col: str, *extra: str) -> DataFrame:
+    """The curation-compatible documents columns (doc_id, text, lang via
+    the marker heuristic, source = registered domain, n_chars,
+    url_canonical, domain) plus ``extra``."""
+    from eligibility_etl_airflow_spark.operators import text
+
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        "text",
+        text.lang_id(F.col("text")).alias("lang"),
+        F.col("domain").alias("source"),
+        F.length("text").cast("long").alias("n_chars"),
+        "url_canonical",
+        "domain",
+        *extra,
+    )
 
 
 def run_eligibility_pipeline(
@@ -222,16 +418,10 @@ def run_corpus_curation_pipeline(
     files. Stats are aggregate counts only — nothing data-proportional
     reaches the driver.
 
-    Funnel-count discipline: ``filtered`` and ``exact_kept`` are
-    persisted before their counts, so the documents scan (and its
-    quality-regex work) runs ONCE — every downstream stage (the hash
-    keeper, the LSH near-dup stage, the anti-join, the clustered write)
-    reads the cache, not the source. ``n_total`` is a bare ``count()``
-    on the parquet source (footer metadata, no column IO) and
-    ``n_curated`` is counted from the written sink's own footers, so
-    neither triggers a recompute of the funnel lineage."""
-    from pyspark import StorageLevel
-
+    ``n_total`` is a bare ``count()`` on the parquet source (footer
+    metadata, no column IO) and ``n_curated`` is counted from the
+    written sink's own footers, so neither recomputes the funnel
+    lineage."""
     from eligibility_etl_airflow_spark.catalog import Catalog
     from eligibility_etl_airflow_spark.operators import neardup, text
 
@@ -251,86 +441,63 @@ def run_corpus_curation_pipeline(
             "the per-pair anti-join keeps minima by construction and would "
             "silently ignore quality"
         )
+    if fluency_cut is not None and not (0.0 < fluency_cut < 1.0):
+        raise ValueError(f"fluency_cut must be in (0, 1), got {fluency_cut}")
 
     # ``documents`` overrides the catalog table — the seam that chains
     # this funnel onto a previous stage's output (e.g.
     # run_crawl_preprocess_pipeline's documents.parquet) or any
     # caller-built relation with (doc_id, text, lang) columns
     docs = documents if documents is not None else Catalog(spark, sf_dir).documents
-    # ``lang_model`` (a train_softmax_classifier dict) re-identifies the
-    # language from the TEXT — the learned char-n-gram classifier
-    # replaces whatever the source metadata claimed, which is the
-    # production posture (crawl-provided lang tags are unreliable). The
-    # language-mix filter below then runs on the predicted label. Pure
-    # column arithmetic + one broadcast weight join (score_softmax); a
-    # doc the scorer can't featurize keeps the model's prior.
-    lang_scored = None
-    if lang_model is not None:
-        from eligibility_etl_airflow_spark.operators import (
-            quality_model as _qm_ops,
+    with _Funnel() as f:
+        # ``lang_model`` (a train_softmax_classifier dict) re-identifies
+        # the language from the TEXT — the learned char-n-gram
+        # classifier replaces whatever the source metadata claimed,
+        # which is the production posture (crawl-provided lang tags are
+        # unreliable). The language-mix filter below then runs on the
+        # predicted label. Pure column arithmetic + one broadcast weight
+        # join (score_softmax); a doc the scorer can't featurize keeps
+        # the model's prior. Cached: n_total, the quality/lang filter
+        # and the audit's source snapshot all read the scored relation.
+        if lang_model is not None:
+            from eligibility_etl_airflow_spark.operators import (
+                quality_model as _qm_ops,
+            )
+
+            pred = _qm_ops.score_softmax(docs, "doc_id", "text", lang_model).select(
+                F.col("id").alias("doc_id"),
+                F.col("pred_label").alias("_pred_lang"),
+            )
+            docs = f.cache(
+                docs.join(pred, "doc_id", "left")
+                .withColumn("lang", F.coalesce("_pred_lang", F.col("lang")))
+                .drop("_pred_lang")
+            )
+        f.stats["n_total"] = docs.count()
+        f.snapshots.append(("source", docs))
+
+        hygienic = f.stage(
+            docs.filter(
+                (text.quality_score(F.col("text")) >= min_quality)
+                & (F.col("lang").isin(*langs))
+            ),
+            "n_after_quality_lang",
+            "quality_lang",
         )
 
-        pred = _qm_ops.score_softmax(docs, "doc_id", "text", lang_model).select(
-            F.col("id").alias("doc_id"),
-            F.col("pred_label").alias("_pred_lang"),
-        )
-        # persisted: the scoring subtree (char-gram explode + two aggs +
-        # broadcast weight join) would otherwise re-run for n_total, the
-        # quality/lang filter, AND every audit-snapshot anti-join — the
-        # same one-scan discipline as `filtered` below
-        docs = (
-            docs.join(pred, "doc_id", "left")
-            .withColumn("lang", F.coalesce("_pred_lang", F.col("lang")))
-            .drop("_pred_lang")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        lang_scored = docs
-    n_total = docs.count()
-    # audit trail: (stage_name, surviving relation) snapshots; consecutive
-    # anti-joins reconstruct which stage dropped each doc (opt-in)
-    snapshots: list = [("source", docs)]
-
-    filtered = docs.filter(
-        (text.quality_score(F.col("text")) >= min_quality)
-        & (F.col("lang").isin(*langs))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    exact_kept = None
-    hygiene_caches: list[DataFrame] = []
-    hygienic = filtered
-    try:
-        n_filtered = filtered.count()  # materializes the one documents scan
-        snapshots.append(("quality_lang", filtered))
-
-        # optional corpus hygiene, both reading the cache (no re-scan):
-        # repetition filter drops looping/stuffed docs; decontamination
-        # drops docs sharing any 8-gram with the provided eval set.
-        # Each stage persists its OUTPUT (same discipline as filtered/
-        # exact_kept) so its token-explode/n-gram subtree runs once —
-        # the stage count materializes the cache, and every downstream
-        # consumer (next stage, keeper agg, semi join) reads it.
-        n_after_repetition = n_after_decontam = n_after_blocklist = None
+        # optional corpus hygiene, cheapest tier first, each reading the
+        # previous stage's cache (no re-scan): blocklist, repetition
+        # (looping/stuffed docs), n-gram decontamination (docs sharing
+        # any 8-gram with the provided eval set), embedding
+        # decontamination, fluency cut, learned quality gate
         if blocklist_terms is not None:
-            # cheapest hygiene tier first: one map-only regexp pass over
-            # the cached relation (operators/text.py::blocklist_metrics —
-            # the C4 "bad words" stage); drop side selected so null-text
-            # docs (keep=True by contract) survive
-            drop_ids = (
-                text.blocklist_metrics(
-                    hygienic,
-                    "doc_id",
-                    "text",
-                    terms=blocklist_terms,
-                    max_fraction=blocklist_max_fraction,
-                )
-                .filter(~F.col("keep"))
-                .select("doc_id")
+            hygienic = f.stage(
+                _blocklist_gate(
+                    hygienic, "doc_id", blocklist_terms, blocklist_max_fraction
+                ),
+                "n_after_blocklist",
+                "blocklist",
             )
-            hygienic = hygienic.join(drop_ids, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            hygiene_caches.append(hygienic)
-            n_after_blocklist = hygienic.count()
-            snapshots.append(("blocklist", hygienic))
         if repetition_filter:
             from eligibility_etl_airflow_spark.operators import repetition
 
@@ -339,12 +506,11 @@ def run_corpus_curation_pipeline(
                 .filter(F.col("keep"))
                 .select("doc_id")
             )
-            hygienic = hygienic.join(keep_ids, "doc_id", "left_semi").persist(
-                StorageLevel.MEMORY_AND_DISK
+            hygienic = f.stage(
+                hygienic.join(keep_ids, "doc_id", "left_semi"),
+                "n_after_repetition",
+                "repetition",
             )
-            hygiene_caches.append(hygienic)
-            n_after_repetition = hygienic.count()
-            snapshots.append(("repetition", hygienic))
         if decontam_bench is not None:
             from eligibility_etl_airflow_spark.operators import decontam
 
@@ -353,13 +519,11 @@ def run_corpus_curation_pipeline(
                 .filter(F.col("contaminated"))
                 .select("doc_id")
             )
-            hygienic = hygienic.join(dirty_ids, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
+            hygienic = f.stage(
+                hygienic.join(dirty_ids, "doc_id", "left_anti"),
+                "n_after_decontam",
+                "decontam_ngram",
             )
-            hygiene_caches.append(hygienic)
-            n_after_decontam = hygienic.count()
-            snapshots.append(("decontam_ngram", hygienic))
-        n_after_semantic_decontam = None
         if semantic_decontam_bench is not None:
             from eligibility_etl_airflow_spark.operators import similarity
 
@@ -382,27 +546,21 @@ def run_corpus_curation_pipeline(
                 .filter(F.col("contaminated") == 1)
                 .select("doc_id")
             )
-            hygienic = hygienic.join(flagged, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
+            hygienic = f.stage(
+                hygienic.join(flagged, "doc_id", "left_anti"),
+                "n_after_semantic_decontam",
+                "decontam_semantic",
             )
-            hygiene_caches.append(hygienic)
-            n_after_semantic_decontam = hygienic.count()
-            snapshots.append(("decontam_semantic", hygienic))
-        n_after_fluency = None
         if fluency_cut is not None:
-            if not (0.0 < fluency_cut < 1.0):
-                raise ValueError(
-                    f"fluency_cut must be in (0, 1), got {fluency_cut}"
-                )
             from eligibility_etl_airflow_spark.operators import lm
 
-            # persisted: the scoring lineage (tokenize + model join +
-            # per-doc aggregate) feeds BOTH the cutoff aggregate and the
-            # drop-id filter — same run-once discipline as every stage
-            scores = lm.unigram_nll_scores(hygienic, "doc_id", "text").persist(
-                StorageLevel.MEMORY_AND_DISK
+            # cached: the self-model feeds the scores' totals and join,
+            # and the scores feed BOTH the cutoff aggregate and the
+            # drop-id filter
+            model = f.cache(lm.unigram_model(hygienic, "doc_id", "text"))
+            scores = f.cache(
+                lm.unigram_nll_scores(hygienic, "doc_id", "text", model=model)
             )
-            hygiene_caches.append(scores)
             # one aggregate finds the cut; only the scalar reaches the
             # driver (approx sketch — exact percentile would sort)
             cutoff = scores.agg(
@@ -417,14 +575,11 @@ def run_corpus_curation_pipeline(
                 if cutoff is not None
                 else F.lit(False)
             ).select(F.col("id").alias("doc_id"))
-            hygienic = hygienic.join(drop_ids, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
+            hygienic = f.stage(
+                hygienic.join(drop_ids, "doc_id", "left_anti"),
+                "n_after_fluency",
+                "fluency_cut",
             )
-            hygiene_caches.append(hygienic)
-            n_after_fluency = hygienic.count()
-            snapshots.append(("fluency_cut", hygienic))
-
-        n_after_learned_quality = None
         if quality_model is not None:
             from eligibility_etl_airflow_spark.operators import quality_model as qm
 
@@ -437,12 +592,11 @@ def run_corpus_curation_pipeline(
                 .filter(F.col("score") < quality_model_min)
                 .select(F.col("id").alias("doc_id"))
             )
-            hygienic = hygienic.join(drop_ids, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
+            hygienic = f.stage(
+                hygienic.join(drop_ids, "doc_id", "left_anti"),
+                "n_after_learned_quality",
+                "learned_quality",
             )
-            hygiene_caches.append(hygienic)
-            n_after_learned_quality = hygienic.count()
-            snapshots.append(("learned_quality", hygienic))
 
         # exact dedup: keep min doc_id per content hash
         keeper = (
@@ -453,14 +607,18 @@ def run_corpus_curation_pipeline(
             .agg(F.min("doc_id").alias("doc_id"))
             .select("doc_id")
         )
-        exact_kept = hygienic.join(keeper, "doc_id", "left_semi").persist(
-            StorageLevel.MEMORY_AND_DISK
+        exact_kept = f.stage(
+            hygienic.join(keeper, "doc_id", "left_semi"),
+            "n_after_exact_dedup",
+            "exact_dedup",
         )
-        n_exact = exact_kept.count()
-        snapshots.append(("exact_dedup", exact_kept))
 
-        pairs = neardup.minhash_lsh_pairs(
-            exact_kept, "doc_id", "text", jaccard_threshold=jaccard_threshold
+        # the shingle table feeds both the signatures and the exact
+        # Jaccard verification (minhash_lsh_pairs' own staging, here
+        # owned by the funnel so it is released with the rest)
+        pairs = neardup.lsh_pairs_from_shingles(
+            f.cache(neardup.shingle_table(exact_kept, "doc_id", "text")),
+            jaccard_threshold=jaccard_threshold,
         )
         if neardup_removal == "component":
             # one keeper per transitive near-dup group (LSH pairs are
@@ -499,17 +657,13 @@ def run_corpus_curation_pipeline(
         else:  # "pair" — validated at entry
             # drop the higher doc_id of each verified pair
             losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-        # persisted: the survivor set feeds the clustered write, the
-        # audit anti-join, and (when enabled) the semantic stage's
-        # embedding semi-join + k-means E/M rounds — without it the
-        # LSH/components loser lineage re-executes per consumer job
-        curated = exact_kept.join(losers, "doc_id", "left_anti").persist(
-            StorageLevel.MEMORY_AND_DISK
+        # cached, not counted: the survivor set feeds the clustered
+        # write, the audit anti-join, and (when enabled) the semantic
+        # stage's embedding semi-join + k-means E/M rounds
+        curated = f.stage(
+            exact_kept.join(losers, "doc_id", "left_anti"), snapshot="neardup_removal"
         )
-        hygiene_caches.append(curated)
-        snapshots.append(("neardup_removal", curated))
 
-        n_after_semantic = None
         if semantic_eps is not None:
             from eligibility_etl_airflow_spark.operators import semdedup
             emb = (
@@ -527,62 +681,29 @@ def run_corpus_curation_pipeline(
                 .filter(~F.col("capped_cluster"))
                 .select(F.col("id").alias("doc_id"))
             )
-            curated = curated.join(sem_drops, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
+            curated = f.stage(
+                curated.join(sem_drops, "doc_id", "left_anti"),
+                "n_after_semantic",
+                "semantic_dedup",
             )
-            hygiene_caches.append(curated)
-            n_after_semantic = curated.count()
-            snapshots.append(("semantic_dedup", curated))
 
         out_path = os.path.join(out_dir, "curated_docs")
         sinks.write_clustered(curated, out_path, ["doc_id"])
-        n_curated = spark.read.parquet(out_path).count()
+        f.stats["n_curated"] = spark.read.parquet(out_path).count()
         if audit_path is not None:
-            # which stage dropped each doc: anti-join consecutive stage
-            # snapshots and union the labeled drops — the curation
-            # funnel's audit trail, (doc_id, dropped_at), one row per
-            # dropped doc. Every intermediate snapshot is persisted, so
-            # each anti-join is a cached-probe join; the "source" end
-            # re-reads the documents parquet once, column-pruned to
-            # doc_id (the one honest extra scan the audit costs)
-            dropped = None
-            for (_, prev_df), (name, cur_df) in zip(snapshots, snapshots[1:]):
-                d_ids = (
-                    prev_df.select("doc_id")
-                    .join(cur_df.select("doc_id"), "doc_id", "left_anti")
-                    .withColumn("dropped_at", F.lit(name))
-                )
-                dropped = d_ids if dropped is None else dropped.unionByName(d_ids)
-            sinks.write_parquet(dropped, audit_path)
-    finally:
-        filtered.unpersist()
-        for cached in hygiene_caches:
-            cached.unpersist()
-        if exact_kept is not None:
-            exact_kept.unpersist()
-        if lang_scored is not None:
-            lang_scored.unpersist()
-    stats = {
-        "n_total": n_total,
-        "n_after_quality_lang": n_filtered,
-        "n_after_exact_dedup": n_exact,
-        "n_curated": n_curated,
-    }
-    if n_after_blocklist is not None:
-        stats["n_after_blocklist"] = n_after_blocklist
-    if n_after_repetition is not None:
-        stats["n_after_repetition"] = n_after_repetition
-    if n_after_decontam is not None:
-        stats["n_after_decontam"] = n_after_decontam
-    if n_after_semantic_decontam is not None:
-        stats["n_after_semantic_decontam"] = n_after_semantic_decontam
-    if n_after_fluency is not None:
-        stats["n_after_fluency"] = n_after_fluency
-    if n_after_learned_quality is not None:
-        stats["n_after_learned_quality"] = n_after_learned_quality
-    if n_after_semantic is not None:
-        stats["n_after_semantic"] = n_after_semantic
-    return stats
+            # which stage dropped each doc, (doc_id, dropped_at): every
+            # snapshot but the source is cached, so each anti-join probes
+            # a cache; the source end re-reads the documents parquet
+            # once, column-pruned to doc_id (the one extra scan the
+            # audit costs)
+            sinks.write_parquet(
+                _snapshot_drops(
+                    [(name, df.select("doc_id")) for name, df in f.snapshots],
+                    "dropped_at",
+                ),
+                audit_path,
+            )
+    return f.stats
 
 
 def run_multi_business_unit(
@@ -675,8 +796,6 @@ def run_training_prep_pipeline(
     a scan-stage map; the split is map-only; packing is one shuffle into
     hash shards); the only new cost here is the final partitioned write.
     """
-    from pyspark import StorageLevel
-
     from eligibility_etl_airflow_spark.catalog import Catalog
     from eligibility_etl_airflow_spark.operators import chunking, packing, sampling
 
@@ -737,8 +856,11 @@ def run_training_prep_pipeline(
         )
     else:
         chunks = sampling.assign_split(chunks, "doc_id", test_frac=test_frac)
-    chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with _Funnel() as f:
+        # the cached chunk relation feeds four subtrees of the one write
+        # below (pack input + join-back per side) — without it the
+        # documents scan and posexplode would run ~4x inside the job
+        chunks = f.cache(chunks)
         packed_parts = []
         for side in ("train", "test"):
             part = chunks.filter(F.col("split") == side)
@@ -753,12 +875,7 @@ def run_training_prep_pipeline(
             )
         out = packed_parts[0].unionByName(packed_parts[1])
         out_path = os.path.join(out_dir, "packed_chunks")
-        # the cached chunk relation feeds four subtrees of this one write
-        # (pack input + join-back per side) — without the persist the
-        # documents scan and posexplode would run ~4x inside the job
         out.write.mode("overwrite").partitionBy("split").parquet(out_path)
-    finally:
-        chunks.unpersist()
 
     written = spark.read.parquet(out_path)
     counts = {
@@ -922,9 +1039,21 @@ def run_incremental_curation(
     operation appends one delta file per batch forever and every
     vs-state join pays the listing. ``None`` disables.
     """
-    from pyspark import StorageLevel
-
+    from eligibility_etl_airflow_spark.operators import drift as drift_ops
     from eligibility_etl_airflow_spark.operators import neardup, text
+
+    if semantic_eps is not None:
+        # fail-fast, schema only: both checks run before any Spark job
+        if embedding_col not in batch.columns:
+            raise ValueError(
+                f"semantic_eps requires the batch to carry an "
+                f"{embedding_col!r} column (null for docs without an "
+                "embedding — those survive the stage)"
+            )
+        if semantic_k != "auto" and not isinstance(semantic_k, int):
+            raise ValueError(
+                f"semantic_k must be an int or 'auto', got {semantic_k!r}"
+            )
 
     docs_path = os.path.join(state_dir, "accepted_docs")
     hash_path = os.path.join(state_dir, "index_hashes")
@@ -951,16 +1080,16 @@ def run_incremental_curation(
         sinks.recover_interrupted_compaction(_p)
     has_state = os.path.exists(hash_path)
 
-    n_batch = batch.count()
-    hashed = batch.withColumn("content_hash", text.fingerprint_md5(F.col("text")))
-    keeper = hashed.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
-    internal = hashed.join(keeper.select("doc_id"), "doc_id", "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    caches = [internal]
-    try:
-        n_internal = internal.count()
+    with _Funnel() as f:
+        f.stats["n_batch"] = batch.count()
+        hashed = batch.withColumn("content_hash", text.fingerprint_md5(F.col("text")))
+        keeper = hashed.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
+        internal = f.stage(
+            hashed.join(keeper.select("doc_id"), "doc_id", "left_semi"),
+            "n_after_internal_exact",
+        )
 
+        fresh = internal
         if has_state:
             # state-shuffle-free anti-join (the r9 scaling fix): the
             # naive batch-anti-state shape shuffle-sorts the ENTIRE hash
@@ -975,25 +1104,17 @@ def run_incremental_curation(
                 "content_hash",
                 "left_semi",
             )
-            fresh = internal.join(
-                F.broadcast(present), "content_hash", "left_anti"
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(fresh)
-        else:
-            fresh = internal
-        n_fresh = fresh.count()
+            fresh = internal.join(F.broadcast(present), "content_hash", "left_anti")
+        fresh = f.stage(fresh, "n_after_exact_vs_state")
 
-        sh = neardup.shingle_table(fresh, "doc_id", "text", shingle_k).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        caches.append(sh)
+        sh = f.cache(neardup.shingle_table(fresh, "doc_id", "text", shingle_k))
         band_tab = neardup.signature_band_table(sh, num_perm, bands).select(
             "id", F.posexplode_outer("bands").alias("band_idx", "band_sig")
         )
 
+        survivors = fresh
         if has_state and os.path.exists(band_path):
             state_bands = spark.read.parquet(band_path)
-            from pyspark.sql.window import Window
 
             # state-shuffle-free band probe (r9): only bands the BATCH
             # actually probes matter, so restrict the index first with a
@@ -1007,10 +1128,11 @@ def run_incremental_curation(
             # probed subset is equivalent to the global count for every
             # band that can produce a candidate.
             probe = band_tab.select("band_idx", "band_sig").distinct()
-            state_hits = state_bands.join(
-                F.broadcast(probe), ["band_idx", "band_sig"], "left_semi"
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(state_hits)
+            state_hits = f.cache(
+                state_bands.join(
+                    F.broadcast(probe), ["band_idx", "band_sig"], "left_semi"
+                )
+            )
             # boilerplate cap on the STATE side: a band shared by
             # everyone has no discriminative signal but linear fan-out
             hot = (
@@ -1074,13 +1196,8 @@ def run_incremental_curation(
                 .select(F.col("new_id").alias("doc_id"))
                 .distinct()
             )
-            survivors = fresh.join(dup_new, "doc_id", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            caches.append(survivors)
-        else:
-            survivors = fresh
-        n_vs_state = survivors.count()
+            survivors = fresh.join(dup_new, "doc_id", "left_anti")
+        survivors = f.stage(survivors, "n_after_fuzzy_vs_state")
 
         # within-batch fuzzy dedup reuses the persisted shingle relation
         # (restricted to survivors) under the SAME shingle_k/num_perm/
@@ -1095,21 +1212,12 @@ def run_incremental_curation(
             jaccard_threshold=jaccard_threshold,
         )
         losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-        accepted = survivors.join(losers, "doc_id", "left_anti").persist(
-            StorageLevel.MEMORY_AND_DISK
+        accepted = f.stage(
+            survivors.join(losers, "doc_id", "left_anti"), "n_after_byte_dedup"
         )
-        caches.append(accepted)
-        n_after_byte = accepted.count()
 
-        n_after_semantic = None
         acc_vecs = None
         if semantic_eps is not None:
-            if embedding_col not in accepted.columns:
-                raise ValueError(
-                    f"semantic_eps requires the batch to carry an "
-                    f"{embedding_col!r} column (null for docs without an "
-                    "embedding — those survive the stage)"
-                )
             from eligibility_etl_airflow_spark.operators import semdedup
             from eligibility_etl_airflow_spark.operators.similarity import (
                 as_double_array,
@@ -1118,14 +1226,11 @@ def run_incremental_curation(
 
             cent_path = os.path.join(state_dir, "index_centroids")
             vec_path = os.path.join(state_dir, "index_vectors")
-            bvec = (
-                accepted.where(F.col(embedding_col).isNotNull())
-                .select(
+            bvec = f.cache(
+                accepted.where(F.col(embedding_col).isNotNull()).select(
                     "doc_id", as_double_array(F.col(embedding_col)).alias("v")
                 )
-                .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            caches.append(bvec)
             if os.path.exists(cent_path):
                 cents = spark.read.parquet(cent_path)
             else:
@@ -1143,19 +1248,21 @@ def run_incremental_curation(
                 k_resolved = semantic_k
                 if semantic_k == "auto":
                     k_resolved = max(16, -(-bvec.count() // 1000))
-                elif not isinstance(semantic_k, int):
-                    raise ValueError(
-                        f"semantic_k must be an int or 'auto', got {semantic_k!r}"
-                    )
                 cents = semdedup.kmeans_centroids(bvec, "doc_id", "v", k=k_resolved)
                 if cents.limit(1).count() > 0:
                     cents.write.mode("overwrite").parquet(cent_path)
                     cents = spark.read.parquet(cent_path)
                 else:
                     cents = None
-            n_semantic_capped = 0
+            # batch members of over-cap clusters are ACCEPTED without a
+            # semantic check (reported, not silently skipped): at 0 this
+            # is free; when it grows, the cluster needs a re-index
+            # (delete index_centroids + index_vectors and replay —
+            # centroids are frozen per corpus lifetime by design, so a
+            # hot cluster cannot be split without retraining)
+            f.stats["n_semantic_capped"] = 0
             if cents is None:
-                n_after_semantic = n_after_byte
+                f.stats["n_after_semantic"] = f.stats["n_after_byte_dedup"]
             else:
                 sem_drop_ids = None
                 if os.path.exists(vec_path):
@@ -1193,7 +1300,7 @@ def run_incremental_curation(
                         .select(F.col("id").alias("doc_id"))
                         .distinct()
                     )
-                    n_semantic_capped += (
+                    f.stats["n_semantic_capped"] += (
                         vs_state.filter(F.col("capped_cluster"))
                         .select("id")
                         .distinct()
@@ -1210,7 +1317,7 @@ def run_incremental_curation(
                 within_ids = within.filter(~F.col("capped_cluster")).select(
                     F.col("id").alias("doc_id")
                 )
-                n_semantic_capped += (
+                f.stats["n_semantic_capped"] += (
                     within.filter(F.col("capped_cluster")).select("id").distinct().count()
                 )
                 all_sem = (
@@ -1218,11 +1325,9 @@ def run_incremental_curation(
                     if sem_drop_ids is None
                     else sem_drop_ids.unionByName(within_ids).distinct()
                 )
-                accepted = accepted.join(all_sem, "doc_id", "left_anti").persist(
-                    StorageLevel.MEMORY_AND_DISK
+                accepted = f.stage(
+                    accepted.join(all_sem, "doc_id", "left_anti"), "n_after_semantic"
                 )
-                caches.append(accepted)
-                n_after_semantic = accepted.count()
                 # the accepted vectors enter the index WITH their
                 # assignment, so future batches compare without
                 # re-assigning state
@@ -1236,7 +1341,7 @@ def run_incremental_curation(
                     .select("id", F.col("assigned_label").cast("long").alias("cluster"))
                     .join(bvec.select(F.col("doc_id").alias("id"), "v"), "id")
                 )
-        n_accepted = n_after_semantic if n_after_semantic is not None else n_after_byte
+        n_accepted = f.stats.get("n_after_semantic", f.stats["n_after_byte_dedup"])
 
         # Materialize EVERY index-append relation (eager checkpoint,
         # lineage truncated) BEFORE the first index write: append_dedup's
@@ -1254,64 +1359,16 @@ def run_incremental_curation(
         if acc_vecs is not None:
             acc_vecs = _stable(acc_vecs)
 
-        # drift vs the PRE-append corpus via the persisted token index
-        # (backfilled once for a pre-index state) — O(batch + vocab),
-        # accepted text never re-read; same design as the crawl
-        # ingest's monitor (see run_incremental_crawl_ingest)
-        drift_row = None
-        batch_counts = None
-        from eligibility_etl_airflow_spark.operators import drift as drift_ops
-
-        maintain_tokens = (
-            drift_report
-            or os.path.exists(token_path)
-            or drift_ops.token_index_has_pending(token_path)
+        # drift vs the PRE-append corpus via the persisted token index,
+        # backfilled once from accepted_docs for a pre-index state
+        maintain_tokens, drift_row = drift_ops.token_index_prepare(
+            spark,
+            token_path,
+            docs_path,
+            accepted if n_accepted else None,
+            drift_report,
+            backfill=os.path.exists(docs_path),
         )
-        if maintain_tokens:
-            import uuid as _uuid
-
-            # recovery: complete a crashed prior run's staged fold before
-            # this batch's JSD reads the index (see the crawl twin; a
-            # mid-swap crash discards the intent and the backfill below
-            # recounts)
-            drift_ops.token_index_fold(
-                spark, token_path, docs_path=docs_path,
-                verify_landed=True, kind="acc",
-            )
-
-            if os.path.exists(docs_path) and not os.path.exists(token_path):
-                backfill = drift_ops.unigram_counts(
-                    spark.read.parquet(docs_path).select("text")
-                )
-                tmp = f"{token_path}__backfill_{_uuid.uuid4().hex[:8]}"
-                backfill.write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, token_path)
-            if n_accepted:
-                batch_counts = _stable(
-                    drift_ops.unigram_counts(accepted.select("text"))
-                )
-            if drift_report and batch_counts is not None and os.path.exists(
-                token_path
-            ):
-                drift_row = (
-                    drift_ops.js_divergence_counts(
-                        batch_counts, spark.read.parquet(token_path)
-                    )
-                    .collect()[0]
-                    .asDict()
-                )
-
-        # write-ahead token-delta intent BEFORE any state write (crash
-        # between the appends and the fold stays recoverable — see the
-        # crawl twin's rationale)
-        if maintain_tokens and batch_counts is not None:
-            drift_ops.token_index_pending_write(
-                token_path,
-                drift_ops.batch_content_key(("acc", accepted)),
-                add=batch_counts,
-                ids=accepted.select("doc_id"),
-                kind="acc",
-            )
 
         # idempotent index + corpus maintenance (doc_id-keyed appends).
         # The corpus append's return value is the id-reuse detector: a
@@ -1348,9 +1405,6 @@ def run_incremental_curation(
         # in-process
         if maintain_tokens:
             drift_ops.token_index_fold(spark, token_path, kind="acc")
-    finally:
-        for c in caches:
-            c.unpersist()
     # between-batches index compaction: all appends and folds above have
     # landed and every batch cache is unpersisted, so the rewrite's
     # refresh-by-path cannot invalidate a live plan; the token index
@@ -1374,30 +1428,15 @@ def run_incremental_curation(
             compact_threshold,
         )
     )
-    stats = {
-        "n_batch": n_batch,
-        "n_after_internal_exact": n_internal,
-        "n_after_exact_vs_state": n_fresh,
-        "n_after_fuzzy_vs_state": n_vs_state,
-        "n_after_byte_dedup": n_after_byte,
-        "n_accepted": n_accepted,
-        # accepted-by-stages minus actually-appended: >0 means rows
-        # reused an already-accepted doc_id (id-allocation bug upstream
-        # or a partially-replayed batch) — see the docstring contract
-        "n_id_reuse_skipped": n_accepted - n_docs_appended,
-        "n_corpus_total": (
-            spark.read.parquet(docs_path).count() if os.path.exists(docs_path) else 0
-        ),
-    }
-    if n_after_semantic is not None:
-        stats["n_after_semantic"] = n_after_semantic
-        # batch members of over-cap clusters are ACCEPTED without a
-        # semantic check (reported, not silently skipped): at 0 this is
-        # free; when it grows, the cluster needs a re-index (delete
-        # index_centroids + index_vectors and replay — centroids are
-        # frozen per corpus lifetime by design, so a hot cluster cannot
-        # be split without retraining)
-        stats["n_semantic_capped"] = n_semantic_capped
+    stats = f.stats
+    stats["n_accepted"] = n_accepted
+    # accepted-by-stages minus actually-appended: >0 means rows reused
+    # an already-accepted doc_id (id-allocation bug upstream or a
+    # partially-replayed batch) — see the docstring contract
+    stats["n_id_reuse_skipped"] = n_accepted - n_docs_appended
+    stats["n_corpus_total"] = (
+        spark.read.parquet(docs_path).count() if os.path.exists(docs_path) else 0
+    )
     if drift_row is not None:
         stats["batch_js_divergence"] = drift_row["js_divergence"]
         stats["batch_vocab_shared"] = drift_row["vocab_shared"]
@@ -1419,8 +1458,7 @@ def run_media_curation_pipeline(
     documents: metadata/validation → unreadable quarantine → exact
     byte dedup → perceptual near-dup dedup → clustered write.
 
-    Stages (each count materialized from a persisted relation, same
-    recount discipline as the text funnel):
+    Stages:
 
     1. **metadata + validation** — format sniff, byte size, content
        md5 (operators/multimodal.binary_metadata: no decode). Null
@@ -1448,8 +1486,6 @@ def run_media_curation_pipeline(
 
     if kind not in ("image", "audio"):
         raise ValueError(f"kind must be 'image' or 'audio', got {kind!r}")
-    from pyspark import StorageLevel
-
     decodable = {"image": ("bmp",), "audio": ("riff",)}[kind]
 
     with_meta = media.withColumn(
@@ -1461,13 +1497,15 @@ def run_media_curation_pipeline(
         F.col("meta.format").alias("format"),
         F.col("meta.content_md5").alias("content_md5"),
     )
-    n_total = media.count()
-    readable = with_meta.filter(
-        F.col(binary_col).isNotNull() & F.col("format").isin(*decodable)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    caches = [readable]
-    try:
-        n_readable = readable.count()
+    with _Funnel() as f:
+        f.stats["n_total"] = media.count()
+        readable = f.stage(
+            with_meta.filter(
+                F.col(binary_col).isNotNull() & F.col("format").isin(*decodable)
+            ),
+            "n_readable",
+        )
+        f.stats["n_quarantined"] = f.stats["n_total"] - f.stats["n_readable"]
         quarantine = with_meta.filter(
             F.col(binary_col).isNull() | ~F.col("format").isin(*decodable)
         ).select(id_col, "format")
@@ -1476,11 +1514,10 @@ def run_media_curation_pipeline(
         keeper = readable.groupBy("content_md5").agg(
             F.min(id_col).alias(id_col)
         )
-        exact_kept = readable.join(
-            keeper.select(id_col), id_col, "left_semi"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(exact_kept)
-        n_exact = exact_kept.count()
+        exact_kept = f.stage(
+            readable.join(keeper.select(id_col), id_col, "left_semi"),
+            "n_after_exact",
+        )
 
         neardup_pairs = (
             multimodal.image_neardup_pairs
@@ -1497,17 +1534,8 @@ def run_media_curation_pipeline(
         curated = exact_kept.join(losers, id_col, "left_anti").drop(binary_col)
         out_path = os.path.join(out_dir, "curated_media")
         sinks.write_clustered(curated, out_path, [id_col])
-        n_curated = spark.read.parquet(out_path).count()
-    finally:
-        for c in caches:
-            c.unpersist()
-    return {
-        "n_total": n_total,
-        "n_readable": n_readable,
-        "n_quarantined": n_total - n_readable,
-        "n_after_exact": n_exact,
-        "n_curated": n_curated,
-    }
+        f.stats["n_curated"] = spark.read.parquet(out_path).count()
+    return f.stats
 
 
 def run_crawl_preprocess_pipeline(
@@ -1568,10 +1596,7 @@ def run_crawl_preprocess_pipeline(
     Scale shape: stages 2/4/5/6/7 are map-only column work fused into
     one pass over the deduped relation; the only shuffles are the
     URL-dedup aggregate (canonical key), line_dedup's two (line key,
-    id key), all partial-aggregated. Same persist-before-count funnel
-    discipline as the curation pipeline — each stage's output is
-    cached, counted once, and read by the next stage; nothing
-    data-proportional reaches the driver.
+    id key), all partial-aggregated.
 
     ``quarantine_path`` (opt-in) writes one (doc_id, url, reason) row
     per DROPPED record — robots_disallowed / malformed_url /
@@ -1588,206 +1613,92 @@ def run_crawl_preprocess_pipeline(
     as the ``sf_dir`` of run_corpus_curation_pipeline /
     run_training_prep_pipeline: the crawl → curate → prep funnel chains
     end to end with no glue."""
-    from pyspark import StorageLevel
-
-    from eligibility_etl_airflow_spark.operators import dedup, text, urls
+    from eligibility_etl_airflow_spark.operators import text
 
     if line_max_df < 2:
         raise ValueError(f"line_max_df must be >= 2, got {line_max_df}")
 
-    n_total = raw.count()
-    caches: list[DataFrame] = []
-    try:
+    with _Funnel() as f:
+        f.stats["n_total"] = raw.count()
+        f.snapshots.append(("source", raw))
         # 0. robots admission (optional)
-        n_after_robots = None
         admitted = raw
         if robots_df is not None:
-            from eligibility_etl_airflow_spark.operators import robots as robots_ops
-
-            rules = robots_ops.robots_rules(
-                robots_df, robots_domain_col, robots_text_col, agent=robots_agent
+            admitted = f.stage(
+                _robots_admitted(
+                    raw, url_col, robots_df, robots_domain_col,
+                    robots_text_col, robots_agent, robots_key,
+                ),
+                "n_after_robots",
+                "robots_disallowed",
             )
-            admitted = (
-                robots_ops.robots_allowed(raw, url_col, rules, key=robots_key)
-                .filter(F.col("crawl_allowed"))
-                .drop("crawl_allowed", "matched_pattern")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            caches.append(admitted)
-            n_after_robots = admitted.count()
-
-        def drops(survivors: DataFrame, source: DataFrame, reason: str) -> DataFrame:
-            # post-strip relations carry only the canonical form
-            u = url_col if url_col in source.columns else "url_canonical"
-            return (
-                source.select(id_col, u)
-                .join(survivors.select(id_col), id_col, "left_anti")
-                .select(
-                    F.col(id_col).alias("doc_id"),
-                    F.col(u).alias("url"),
-                    F.lit(reason).alias("reason"),
-                )
-            )
-
-        quarantine_parts: list[DataFrame] = []
-        if quarantine_path is not None and robots_df is not None:
-            quarantine_parts.append(drops(admitted, raw, "robots_disallowed"))
 
         # 1. canonicalize + URL dedup
-        with_url = urls.url_components(admitted, url_col).filter(
-            F.col("url_canonical").isNotNull()
-        )
-        keeper = (
-            with_url.groupBy("url_canonical")
-            .agg(F.min(id_col).alias(id_col))
-            .select(id_col)
-        )
-        url_deduped = with_url.join(keeper, id_col, "left_semi").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        caches.append(url_deduped)
-        n_url_deduped = url_deduped.count()
-        if quarantine_path is not None:
-            quarantine_parts.append(drops(with_url, admitted, "malformed_url"))
-            quarantine_parts.append(drops(url_deduped, with_url, "url_duplicate"))
+        with_url, url_deduped = _url_deduped(admitted, url_col, id_col)
+        f.snapshots.append(("malformed_url", with_url))
+        url_deduped = f.stage(url_deduped, "n_after_url_dedup", "url_duplicate")
 
-        # 2+3. HTML → text (newline-preserving), then line-level dedup
-        # persisted: line_dedup consumes its input through TWO physical
-        # subtrees (the line-frequency aggregate and the join probe), so
-        # without the cache the strip_html regexp chain — the dominant
-        # map cost at crawl scale — would execute twice
-        texted = url_deduped.select(
-            id_col,
-            "url_canonical",
-            F.col("url_domain").alias("domain"),
-            text.strip_html(F.col(html_col), collapse_ws=False).alias("text"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(texted)
-        lined = dedup.line_dedup(texted, id_col, "text", max_line_df=line_max_df)
-        rebuilt = (
-            texted.drop("text")
-            .join(lined.select(id_col, "text_clean"), id_col)
-            .filter(F.trim(F.col("text_clean")) != "")
-            .withColumnRenamed("text_clean", "text")
+        # 2+3+4. HTML → text, line-level dedup, NFC
+        current = f.stage(
+            _clean_html(f, url_deduped, id_col, html_col, line_max_df, nfc),
+            "n_after_line_dedup",
+            "boilerplate_empty",
         )
-        # 4. NFC — map-only, composes into the same pass
-        if nfc:
-            rebuilt = rebuilt.withColumn("text", text.unicode_nfc(F.col("text")))
-        cleaned = rebuilt.persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(cleaned)
-        n_after_lines = cleaned.count()
-        if quarantine_path is not None:
-            quarantine_parts.append(
-                drops(cleaned, url_deduped, "boilerplate_empty")
-            )
-
         # 5. blocklist gate (optional)
-        n_after_blocklist = None
-        current = cleaned
         if blocklist_terms is not None:
-            drop_ids = (
-                text.blocklist_metrics(
-                    current,
-                    id_col,
-                    "text",
-                    terms=blocklist_terms,
-                    max_fraction=blocklist_max_fraction,
-                )
-                .filter(~F.col("keep"))
-                .select(id_col)
+            current = f.stage(
+                _blocklist_gate(
+                    current, id_col, blocklist_terms, blocklist_max_fraction
+                ),
+                "n_after_blocklist",
+                "blocklist",
             )
-            before_blocklist = current
-            current = current.join(drop_ids, id_col, "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            caches.append(current)
-            n_after_blocklist = current.count()
-            if quarantine_path is not None:
-                quarantine_parts.append(
-                    drops(current, before_blocklist, "blocklist")
-                )
-
         # 6. script gate (optional)
-        n_after_script = None
         if min_latin_fraction is not None:
-            profiled = current.select(
-                id_col, *text.script_profile(F.col("text"))
-            ).filter(F.col("frac_latin") >= min_latin_fraction)
-            before_script = current
-            current = current.join(
-                profiled.select(id_col), id_col, "left_semi"
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(current)
-            n_after_script = current.count()
-            if quarantine_path is not None:
-                quarantine_parts.append(
-                    drops(current, before_script, "script_gate")
-                )
-
+            current = f.stage(
+                _script_gate(current, id_col, min_latin_fraction),
+                "n_after_script",
+                "script_gate",
+            )
         # 7. mojibake gate (optional): double-encoded text is valid
         # UTF-8, so the byte-level triage upstream cannot catch it —
         # the derived cp1252-signature density does (operators/text.py)
-        n_after_mojibake = None
         if max_mojibake_per_kchar is not None:
             ok = text.mojibake_metrics(
                 current, id_col, "text",
                 max_per_kchar=max_mojibake_per_kchar,
             ).filter(F.col("keep")).select(F.col("id").alias(id_col))
-            before_moji = current
-            current = current.join(ok, id_col, "left_semi").persist(
-                StorageLevel.MEMORY_AND_DISK
+            current = f.stage(
+                current.join(ok, id_col, "left_semi"),
+                "n_after_mojibake",
+                "mojibake_gate",
             )
-            caches.append(current)
-            n_after_mojibake = current.count()
-            if quarantine_path is not None:
-                quarantine_parts.append(
-                    drops(current, before_moji, "mojibake_gate")
-                )
 
-        # the output IS a documents table: curation-compatible columns
-        # (lang via the marker heuristic, source = registered domain,
-        # n_chars) written under documents.parquet so this stage's
-        # out_dir is a valid sf_dir for run_corpus_curation_pipeline /
-        # run_training_prep_pipeline — the funnel chains end to end
-        final = current.select(
-            F.col(id_col).alias("doc_id"),
-            "text",
-            text.lang_id(F.col("text")).alias("lang"),
-            F.col("domain").alias("source"),
-            F.length("text").cast("long").alias("n_chars"),
-            "url_canonical",
-            "domain",
-        )
+        # the output IS a documents table, written under
+        # documents.parquet so this stage's out_dir is a valid sf_dir
+        # for run_corpus_curation_pipeline / run_training_prep_pipeline
         out_path = os.path.join(out_dir, "documents.parquet")
-        sinks.write_clustered(final, out_path, ["doc_id"])
-        n_out = spark.read.parquet(out_path).count()
-        n_quarantined = None
+        sinks.write_clustered(_documents_table(current, id_col), out_path, ["doc_id"])
+        f.stats["n_preprocessed"] = spark.read.parquet(out_path).count()
         if quarantine_path is not None:
-            from functools import reduce
-
-            q = reduce(lambda a, b: a.unionByName(b), quarantine_parts)
-            q.write.mode("overwrite").parquet(quarantine_path)
-            n_quarantined = spark.read.parquet(quarantine_path).count()
-    finally:
-        for c in caches:
-            c.unpersist()
-    stats = {
-        "n_total": n_total,
-        "n_after_url_dedup": n_url_deduped,
-        "n_after_line_dedup": n_after_lines,
-        "n_preprocessed": n_out,
-    }
-    if n_after_robots is not None:
-        stats["n_after_robots"] = n_after_robots
-    if n_quarantined is not None:
-        stats["n_quarantined"] = n_quarantined
-    if n_after_blocklist is not None:
-        stats["n_after_blocklist"] = n_after_blocklist
-    if n_after_script is not None:
-        stats["n_after_script"] = n_after_script
-    if n_after_mojibake is not None:
-        stats["n_after_mojibake"] = n_after_mojibake
-    return stats
+            # relations past the HTML strip carry only the canonical URL
+            _snapshot_drops(
+                [
+                    (
+                        reason,
+                        df.select(
+                            F.col(id_col).alias("doc_id"),
+                            F.col(
+                                url_col if url_col in df.columns else "url_canonical"
+                            ).alias("url"),
+                        ),
+                    )
+                    for reason, df in f.snapshots
+                ],
+                "reason",
+            ).write.mode("overwrite").parquet(quarantine_path)
+            f.stats["n_quarantined"] = spark.read.parquet(quarantine_path).count()
+    return f.stats
 
 
 def run_incremental_crawl_ingest(
@@ -1874,14 +1785,15 @@ def run_incremental_crawl_ingest(
     mid-fold), any of accepted_docs / index_urls / index_hashes whose
     parquet file count crossed the threshold is rewritten in place.
     ``None`` disables."""
-    from pyspark import StorageLevel
-
-    from eligibility_etl_airflow_spark.operators import dedup, text, urls
+    from eligibility_etl_airflow_spark.operators import drift as drift_ops
+    from eligibility_etl_airflow_spark.operators import text
 
     if recrawl_policy not in ("skip", "update"):
         raise ValueError(
             f"recrawl_policy must be 'skip' or 'update', got {recrawl_policy!r}"
         )
+    if line_max_df < 2:
+        raise ValueError(f"line_max_df must be >= 2, got {line_max_df}")
     docs_path = os.path.join(state_dir, "accepted_docs")
     url_index = os.path.join(state_dir, "index_urls")
     hash_index = os.path.join(state_dir, "index_hashes")
@@ -1895,9 +1807,8 @@ def run_incremental_crawl_ingest(
         sinks.recover_interrupted_compaction(_p)
     has_state = os.path.exists(url_index)
 
-    n_batch = batch.count()
-    caches: list[DataFrame] = []
-    try:
+    with _Funnel() as f:
+        f.stats["n_batch"] = batch.count()
         # one-time state migration: a url index written before the
         # update-policy era lacks content_hash; appending 3-column rows
         # into a 2-column directory would mix parquet schemas (reads
@@ -1908,14 +1819,12 @@ def run_incremental_crawl_ingest(
             import shutil
             import uuid
 
-            from eligibility_etl_airflow_spark.operators import text as _text
-
             migrated = _stable(
                 spark.read.parquet(url_index)
                 .select("url_canonical", "doc_id")
                 .join(
                     spark.read.parquet(docs_path).select(
-                        "doc_id", _text.fingerprint_md5(F.col("text")).alias(
+                        "doc_id", text.fingerprint_md5(F.col("text")).alias(
                             "content_hash"
                         )
                     ),
@@ -1930,35 +1839,20 @@ def run_incremental_crawl_ingest(
             os.rename(tmp, url_index)
             shutil.rmtree(old_dir)
 
-        # robots admission first — a compliant crawler never fetched a
-        # disallowed URL, so nothing downstream should see it (same
-        # stage-0 contract as run_crawl_preprocess_pipeline)
+        # robots admission first (same stage-0 contract as
+        # run_crawl_preprocess_pipeline)
         admitted = batch
-        n_after_robots = None
         if robots_df is not None:
-            from eligibility_etl_airflow_spark.operators import robots as robots_ops
-
-            rules = robots_ops.robots_rules(
-                robots_df, robots_domain_col, robots_text_col, agent=robots_agent
+            admitted = f.stage(
+                _robots_admitted(
+                    batch, url_col, robots_df, robots_domain_col,
+                    robots_text_col, robots_agent, robots_key,
+                ),
+                "n_after_robots",
             )
-            admitted = (
-                robots_ops.robots_allowed(batch, url_col, rules, key=robots_key)
-                .filter(F.col("crawl_allowed"))
-                .drop("crawl_allowed", "matched_pattern")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            caches.append(admitted)
-            n_after_robots = admitted.count()
 
-        with_url = urls.url_components(admitted, url_col).filter(
-            F.col("url_canonical").isNotNull()
-        )
-        keeper = (
-            with_url.groupBy("url_canonical")
-            .agg(F.min(id_col).alias(id_col))
-            .select(id_col)
-        )
-        batch_urls = with_url.join(keeper, id_col, "left_semi")
+        batch_urls = _url_deduped(admitted, url_col, id_col)[1]
+        url_deduped = batch_urls
         recrawls_src = None
         if has_state:
             # state-shuffle-free URL dedup (r9, same shape as the hash
@@ -1974,58 +1868,27 @@ def run_incremental_crawl_ingest(
                 "left_semi",
             )
             if recrawl_policy == "update":
-                batch_urls = batch_urls.persist(StorageLevel.MEMORY_AND_DISK)
-                caches.append(batch_urls)
-                url_present = url_present.persist(StorageLevel.MEMORY_AND_DISK)
-                caches.append(url_present)
+                batch_urls = f.cache(batch_urls)
+                url_present = f.cache(url_present)
                 recrawls_src = batch_urls.join(
                     F.broadcast(url_present), "url_canonical", "left_semi"
                 )
             url_deduped = batch_urls.join(
                 F.broadcast(url_present), "url_canonical", "left_anti"
             )
-        else:
-            url_deduped = batch_urls
-        url_deduped = url_deduped.persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(url_deduped)
-        n_new_urls = url_deduped.count()
+        url_deduped = f.stage(url_deduped, "n_new_urls")
 
         def clean(rel: DataFrame) -> DataFrame:
             # strip -> line dedup -> NFC -> gates -> content hash; the
             # line-frequency window is the relation it is given (per
             # split in update mode — documented trade)
-            texted = rel.select(
-                id_col,
-                "url_canonical",
-                F.col("url_domain").alias("domain"),
-                text.strip_html(F.col(html_col), collapse_ws=False).alias("text"),
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(texted)
-            lined = dedup.line_dedup(texted, id_col, "text", max_line_df=line_max_df)
-            rebuilt = (
-                texted.drop("text")
-                .join(lined.select(id_col, "text_clean"), id_col)
-                .filter(F.trim(F.col("text_clean")) != "")
-                .withColumnRenamed("text_clean", "text")
-            )
-            if nfc:
-                rebuilt = rebuilt.withColumn("text", text.unicode_nfc(F.col("text")))
-            current = rebuilt
+            current = _clean_html(f, rel, id_col, html_col, line_max_df, nfc)
             if blocklist_terms is not None:
-                drop_ids = (
-                    text.blocklist_metrics(
-                        current, id_col, "text",
-                        terms=blocklist_terms, max_fraction=blocklist_max_fraction,
-                    )
-                    .filter(~F.col("keep"))
-                    .select(id_col)
+                current = _blocklist_gate(
+                    current, id_col, blocklist_terms, blocklist_max_fraction
                 )
-                current = current.join(drop_ids, id_col, "left_anti")
             if min_latin_fraction is not None:
-                ok_ids = current.select(
-                    id_col, *text.script_profile(F.col("text"))
-                ).filter(F.col("frac_latin") >= min_latin_fraction)
-                current = current.join(ok_ids.select(id_col), id_col, "left_semi")
+                current = _script_gate(current, id_col, min_latin_fraction)
             return current.withColumn(
                 "content_hash", text.fingerprint_md5(F.col("text"))
             )
@@ -2045,76 +1908,22 @@ def run_incremental_crawl_ingest(
                 F.broadcast(hash_present), "content_hash", "left_anti"
             )
 
-        accepted = _stable(
-            deduped.select(
-                F.col(id_col).alias("doc_id"),
-                "text",
-                text.lang_id(F.col("text")).alias("lang"),
-                F.col("domain").alias("source"),
-                F.length("text").cast("long").alias("n_chars"),
-                "url_canonical",
-                "domain",
-                "content_hash",
-            )
-        )
+        accepted = _stable(_documents_table(deduped, id_col, "content_hash"))
         n_accepted = accepted.count()
 
-        # drift vs the PRE-append state, via the persisted token index —
-        # the batch's unigram counts join the vocab-sized index, so the
-        # per-batch drift cost is O(batch + vocab) and accepted text is
-        # NEVER re-read (the function's core invariant). The index is
-        # maintained whenever it exists OR drift_report is on, so a
-        # later flag-off call cannot silently let it go stale. A state
-        # built before the token-index era is backfilled ONCE from the
-        # accepted docs (the only O(corpus) token pass the index ever
-        # costs) — same staged write + rename swap as the url-index
-        # migration above.
-        drift_row = None
-        batch_counts = None
-        from eligibility_etl_airflow_spark.operators import drift as drift_ops
-
-        maintain_tokens = (
-            drift_report
-            or os.path.exists(token_index)
-            or drift_ops.token_index_has_pending(token_index)
+        # drift vs the PRE-append state via the persisted token index —
+        # accepted text is NEVER re-read (the function's core
+        # invariant); a state built before the token-index era is
+        # backfilled once from the accepted docs
+        maintain_tokens, drift_row = drift_ops.token_index_prepare(
+            spark,
+            token_index,
+            docs_path,
+            accepted if n_accepted else None,
+            drift_report,
+            backfill=has_state,
+            kinds=("acc", "upd"),
         )
-        if maintain_tokens:
-            import uuid as _uuid
-
-            # recovery first: a prior run that crashed between a state
-            # write and its index fold left a __pending intent — fold
-            # each kind now so the index is caught up BEFORE this
-            # batch's JSD reads it (idempotent via the per-kind _folded
-            # markers; applied only if that mutation actually reached
-            # the docs state; a mid-swap crash discards the intent and
-            # falls through to the backfill recount below)
-            for _kind in ("acc", "upd"):
-                drift_ops.token_index_fold(
-                    spark, token_index, docs_path=docs_path,
-                    verify_landed=True, kind=_kind,
-                )
-
-            if has_state and not os.path.exists(token_index):
-                backfill = drift_ops.unigram_counts(
-                    spark.read.parquet(docs_path).select("text")
-                )
-                tmp = f"{token_index}__backfill_{_uuid.uuid4().hex[:8]}"
-                backfill.write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, token_index)
-            if n_accepted:
-                batch_counts = _stable(
-                    drift_ops.unigram_counts(accepted.select("text"))
-                )
-            if drift_report and batch_counts is not None and os.path.exists(
-                token_index
-            ):
-                drift_row = (
-                    drift_ops.js_divergence_counts(
-                        batch_counts, spark.read.parquet(token_index)
-                    )
-                    .collect()[0]
-                    .asDict()
-                )
 
         # update path: re-crawled URLs whose CLEANED content changed
         # replace their accepted doc in place; computed (and _stable'd)
@@ -2123,73 +1932,47 @@ def run_incremental_crawl_ingest(
         if recrawls_src is not None:
             idx = spark.read.parquet(url_index)
             updated = _stable(
-                clean(recrawls_src)
-                .join(
-                    idx.select(
-                        "url_canonical", F.col("content_hash").alias("_old")
-                    ),
-                    "url_canonical",
-                )
-                .filter(F.col("content_hash") != F.col("_old"))
-                .select(
-                    F.col(id_col).alias("doc_id"),
-                    "text",
-                    text.lang_id(F.col("text")).alias("lang"),
-                    F.col("domain").alias("source"),
-                    F.length("text").cast("long").alias("n_chars"),
-                    "url_canonical",
-                    "domain",
+                _documents_table(
+                    clean(recrawls_src)
+                    .join(
+                        idx.select(
+                            "url_canonical", F.col("content_hash").alias("_old")
+                        ),
+                        "url_canonical",
+                    )
+                    .filter(F.col("content_hash") != F.col("_old")),
+                    id_col,
                     "content_hash",
                 )
             )
             n_updated = updated.count()
 
-        # token-count deltas for the update path, materialized BEFORE
-        # merge_upsert rewrites docs_path: the replaced documents' OLD
-        # text leaves the corpus, so its counts must leave the index
-        # (else the index accretes ghost vocabulary). The old-text read
-        # piggybacks on the update path, which already rewrites
-        # docs_path wholesale — no new asymptotic cost.
-        upd_add = upd_sub = None
-        if maintain_tokens and n_updated:
-            upd_add = _stable(
-                drift_ops.unigram_counts(updated.select("text"))
-            )
-            upd_sub = _stable(
-                drift_ops.unigram_counts(
-                    spark.read.parquet(docs_path)
-                    .join(
-                        updated.select("url_canonical"),
-                        "url_canonical",
-                        "left_semi",
-                    )
-                    .select("text")
-                )
-            )
-
-        # write-ahead token-delta intents BEFORE any state write: a
-        # crash between a write below and its fold is then recoverable
-        # on the next ingest (the replay accepts nothing, so without
-        # this staging the fold input would be lost and the index
-        # permanently stale). The accepted-appends deltas and the
-        # update-merge deltas are SEPARATE intents because those writes
-        # land at different times — one combined intent could fold the
-        # un-landed half after a crash between them, then fold it again
-        # on replay.
-        if maintain_tokens and batch_counts is not None:
-            drift_ops.token_index_pending_write(
-                token_index,
-                drift_ops.batch_content_key(("acc", accepted)),
-                add=batch_counts,
-                ids=accepted.select("doc_id"),
-                kind="acc",
-            )
+        # token-count deltas for the update path, staged as their own
+        # write-ahead intent BEFORE merge_upsert rewrites docs_path: the
+        # replaced documents' OLD text leaves the corpus, so its counts
+        # must leave the index (else the index accretes ghost
+        # vocabulary). The old-text read piggybacks on the update path,
+        # which already rewrites docs_path wholesale — no new asymptotic
+        # cost. A separate intent from the accepted appends' because
+        # those writes land at different times — one combined intent
+        # could fold the un-landed half after a crash between them, then
+        # fold it again on replay.
         if maintain_tokens and n_updated:
             drift_ops.token_index_pending_write(
                 token_index,
                 drift_ops.batch_content_key(("upd", updated)),
-                add=upd_add,
-                subtract=upd_sub,
+                add=_stable(drift_ops.unigram_counts(updated.select("text"))),
+                subtract=_stable(
+                    drift_ops.unigram_counts(
+                        spark.read.parquet(docs_path)
+                        .join(
+                            updated.select("url_canonical"),
+                            "url_canonical",
+                            "left_semi",
+                        )
+                        .select("text")
+                    )
+                ),
                 ids=updated.select("doc_id"),
                 kind="upd",
             )
@@ -2247,9 +2030,6 @@ def run_incremental_crawl_ingest(
         if maintain_tokens:
             drift_ops.token_index_fold(spark, token_index, kind="acc")
             drift_ops.token_index_fold(spark, token_index, kind="upd")
-    finally:
-        for c in caches:
-            c.unpersist()
     # between-batches index compaction (see run_incremental_curation):
     # appends/merges/folds have landed, caches are gone, token index
     # excluded (self-compacting per fold); same defensive WAL guard
@@ -2260,19 +2040,14 @@ def run_incremental_crawl_ingest(
             spark, [docs_path, url_index, hash_index], compact_threshold
         )
     )
-    stats = {
-        "n_batch": n_batch,
-        "n_new_urls": n_new_urls,
-        "n_accepted": n_accepted,
-        # same id-reuse detector as run_incremental_curation: rows the
-        # stages accepted but the doc_id-keyed corpus append skipped
-        "n_id_reuse_skipped": n_accepted - n_docs_appended,
-        "n_total_accepted": spark.read.parquet(docs_path).count(),
-    }
+    stats = f.stats
+    stats["n_accepted"] = n_accepted
+    # same id-reuse detector as run_incremental_curation: rows the
+    # stages accepted but the doc_id-keyed corpus append skipped
+    stats["n_id_reuse_skipped"] = n_accepted - n_docs_appended
+    stats["n_total_accepted"] = spark.read.parquet(docs_path).count()
     if compacted:
         stats["compacted_indexes"] = compacted
-    if n_after_robots is not None:
-        stats["n_after_robots"] = n_after_robots
     if n_updated is not None:
         stats["n_updated"] = n_updated
     if drift_row is not None:
@@ -2346,25 +2121,22 @@ def run_crawl_frontier_pipeline(
     rename) for the next cycle's ``pagerank_init`` — both wired
     together by :func:`run_incremental_frontier`.
     """
-    from pyspark import StorageLevel
-
     from eligibility_etl_airflow_spark.operators import (
         linkgraph,
         robots as robots_ops,
         urls,
     )
 
-    # page_edges_df lets run_incremental_frontier share ONE href
-    # extraction pass between the edge-state append and this pipeline —
-    # the raw-HTML regex explode is the dominant per-batch cost and must
-    # not run twice per cycle
-    page_edges = (
-        page_edges_df
-        if page_edges_df is not None
-        else urls.extract_link_edges(pages, url_col, html_col, domain_grain=False)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    caches: list[DataFrame] = [page_edges]
-    try:
+    with _Funnel() as f:
+        # page_edges_df lets run_incremental_frontier share ONE href
+        # extraction pass between the edge-state append and this
+        # pipeline — the raw-HTML regex explode is the dominant
+        # per-batch cost and must not run twice per cycle
+        page_edges = f.cache(
+            page_edges_df
+            if page_edges_df is not None
+            else urls.extract_link_edges(pages, url_col, html_col, domain_grain=False)
+        )
         crawled = (
             urls.url_components(pages, url_col)
             .select(F.col("url_canonical"))
@@ -2400,11 +2172,12 @@ def run_crawl_frontier_pipeline(
             crawled = crawled.unionByName(
                 crawled_urls_df.select("url_canonical").distinct()
             )
-        candidates = candidates.join(
-            crawled, F.col("url") == F.col("url_canonical"), "left_anti"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(candidates)
-        n_candidates = candidates.count()
+        candidates = f.stage(
+            candidates.join(
+                crawled, F.col("url") == F.col("url_canonical"), "left_anti"
+            ),
+            "n_candidates",
+        )
 
         if domain_edges_df is not None:
             # continuous operation: authority comes from the FULL
@@ -2469,19 +2242,14 @@ def run_crawl_frontier_pipeline(
             F.coalesce(F.col("rank"), F.lit(0.0)).alias("priority"),
         )
 
-        n_admitted = None
         if robots_df is not None:
-            rules = robots_ops.robots_rules(
-                robots_df, robots_domain_col, robots_text_col, agent=robots_agent
+            scored = f.stage(
+                _robots_admitted(
+                    scored, "url", robots_df, robots_domain_col,
+                    robots_text_col, robots_agent, robots_key,
+                ),
+                "n_admitted",
             )
-            scored = (
-                robots_ops.robots_allowed(scored, "url", rules, key=robots_key)
-                .filter(F.col("crawl_allowed"))
-                .drop("crawl_allowed", "matched_pattern")
-            )
-            scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(scored)
-            n_admitted = scored.count()
 
         frontier = robots_ops.frontier_schedule(
             scored,
@@ -2524,19 +2292,9 @@ def run_crawl_frontier_pipeline(
         out_path = os.path.join(out_dir, "frontier.parquet")
         sinks.write_clustered(frontier, out_path, ["fetch_cycle", "domain"])
         written = spark.read.parquet(out_path)
-        n_scheduled = written.count()
-        n_domains = written.select("domain").distinct().count()
-    finally:
-        for c in caches:
-            c.unpersist()
-    stats = {
-        "n_candidates": n_candidates,
-        "n_scheduled": n_scheduled,
-        "n_domains": n_domains,
-    }
-    if n_admitted is not None:
-        stats["n_admitted"] = n_admitted
-    return stats
+        f.stats["n_scheduled"] = written.count()
+        f.stats["n_domains"] = written.select("domain").distinct().count()
+    return f.stats
 
 
 def run_incremental_frontier(

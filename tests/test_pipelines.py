@@ -2326,3 +2326,206 @@ def test_ann_query_state_serves_curation_vector_index(spark, tmp_path):
 
     with pytest.raises(FileNotFoundError, match="semantic index"):
         pipelines.ann_query_state(spark, str(tmp_path / "nope"), q)
+
+
+def _seeded_semantic_state(spark, state):
+    """A curation state whose semantic index already holds centroids."""
+    batch = spark.createDataFrame(
+        [
+            (i, f"seed document {i} words w{i} x{i} y{i} z{i}",
+             [1.0 if d == i else 0.0 for d in range(4)])
+            for i in range(4)
+        ],
+        "doc_id long, text string, embedding array<double>",
+    )
+    pipelines.run_incremental_curation(
+        spark, batch, state, semantic_eps=0.99, semantic_k=2
+    )
+    assert os.path.exists(os.path.join(state, "index_centroids"))
+    return batch
+
+
+@pytest.mark.parametrize(
+    "case", ["fluency_cut", "embedding_col", "semantic_k", "line_max_df"]
+)
+def test_parameter_checks_run_before_any_spark_job(spark, sf_dir, tmp_path, case):
+    """A bad parameter raises ValueError at the function's entry, before
+    the funnel starts a single Spark job — including a bad semantic_k on
+    a state whose centroids are already trained (the k is then unused,
+    but the value is still wrong)."""
+    state = str(tmp_path / "state")
+    if case == "semantic_k":
+        seeded = _seeded_semantic_state(spark, state)
+    text_batch = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon")], "doc_id long, text string"
+    )
+    raw = spark.createDataFrame(
+        [(1, "https://a.example.com/x", "<p>some words here</p>")],
+        "doc_id long, url string, html string",
+    )
+    calls = {
+        "fluency_cut": lambda: pipelines.run_corpus_curation_pipeline(
+            spark, sf_dir, str(tmp_path / "out"), fluency_cut=1.5
+        ),
+        "embedding_col": lambda: pipelines.run_incremental_curation(
+            spark, text_batch, state, semantic_eps=0.9
+        ),
+        "semantic_k": lambda: pipelines.run_incremental_curation(
+            spark, seeded, state, semantic_eps=0.99, semantic_k="two"
+        ),
+        "line_max_df": lambda: pipelines.run_incremental_crawl_ingest(
+            spark, raw, state, line_max_df=1
+        ),
+    }
+    sc = spark.sparkContext
+    group = f"parameter-check-{case}"
+    sc.setJobGroup(group, "parameter check")
+    try:
+        with pytest.raises(ValueError):
+            calls[case]()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def _crawl_pages(spark, n=12):
+    """Raw crawl rows with distinct bodies and shared site chrome."""
+    nav = "<div>NAV BAR HOME</div>"
+    rows = [
+        (
+            i,
+            f"https://www.site{i % 4}.example.com/page/{i}?utm_source=x",
+            f"<html><body>{nav}<p>unique article body {i} text &amp; more</p>"
+            f'<a href="https://new{i % 3}.example.org/n{i}">l</a>'
+            f"<script>track({i})</script></body></html>",
+        )
+        for i in range(n)
+    ]
+    rows += [
+        (100, "not-a-url", "<p>orphan page</p>"),
+        (101, "https://www.site1.example.com/private/a",
+         f"<html><body>{nav}<p>private page body</p></body></html>"),
+        (102, "https://other.example.org/x",
+         f"<html><body>{nav}<p>FORBIDDENWORD appears here</p></body></html>"),
+        (103, "https://ru.example.net/y",
+         f"<html><body>{nav}<p>Привет мир мир мир</p></body></html>"),
+        (104, "https://www.site2.example.com/page/2?utm_campaign=y",
+         f"<html><body>{nav}<p>same page, second fetch</p></body></html>"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, url string, html string")
+
+
+def _robots(spark):
+    return spark.createDataFrame(
+        [("www.site1.example.com", "User-agent: *\nDisallow: /private\n")],
+        "domain string, robots string",
+    )
+
+
+def _funnel_call(name, spark, sf_dir, tmp_path):
+    out, state = str(tmp_path / "out"), str(tmp_path / "state")
+    if name == "corpus_curation":
+        return lambda: pipelines.run_corpus_curation_pipeline(spark, sf_dir, out)
+    if name == "incremental_curation":
+        batch = spark.createDataFrame(
+            [(1, "alpha beta gamma delta epsilon zeta eta theta"),
+             (2, "one two three four five six seven eight"),
+             (3, "alpha beta gamma delta epsilon zeta eta theta")],
+            "doc_id long, text string",
+        )
+        return lambda: pipelines.run_incremental_curation(spark, batch, state)
+    if name == "media_curation":
+        import numpy as np
+
+        from eligibility_etl_airflow_spark.operators import multimodal
+
+        img = multimodal.encode_bmp_rgb24(np.zeros((8, 8, 3), dtype=np.uint8) + 7)
+        media = spark.createDataFrame(
+            [(1, img), (2, img), (3, None)], "media_id long, payload binary"
+        )
+        return lambda: pipelines.run_media_curation_pipeline(spark, media, out)
+    raw, robots = _crawl_pages(spark), _robots(spark)
+    if name == "crawl_preprocess":
+        return lambda: pipelines.run_crawl_preprocess_pipeline(
+            spark, raw, out, robots_df=robots, quarantine_path=str(tmp_path / "q")
+        )
+    if name == "incremental_crawl_ingest":
+        return lambda: pipelines.run_incremental_crawl_ingest(
+            spark, raw, state, robots_df=robots
+        )
+    assert name == "crawl_frontier"
+    return lambda: pipelines.run_crawl_frontier_pipeline(
+        spark, raw, out, robots_df=robots
+    )
+
+
+# the first write each funnel reaches once all of its stages are cached
+_FUNNEL_FIRST_WRITE = {
+    "corpus_curation": "write_clustered",
+    "incremental_curation": "append_dedup",
+    "media_curation": "write_clustered",
+    "crawl_preprocess": "write_clustered",
+    "incremental_crawl_ingest": "append_dedup",
+    "crawl_frontier": "write_clustered",
+}
+
+
+@pytest.mark.parametrize("fails", [False, True], ids=["returns", "raises"])
+@pytest.mark.parametrize("name", sorted(_FUNNEL_FIRST_WRITE))
+def test_funnels_release_their_caches(spark, sf_dir, tmp_path, monkeypatch, name, fails):
+    """Every curation/crawl funnel leaves Spark's cache manager empty,
+    both after a normal return and after a stage raises mid-funnel."""
+    from eligibility_etl_airflow_spark.sources import sinks
+
+    call = _funnel_call(name, spark, sf_dir, tmp_path)
+    if fails:
+        def boom(*args, **kwargs):
+            raise RuntimeError("stage failed")
+
+        monkeypatch.setattr(sinks, _FUNNEL_FIRST_WRITE[name], boom)
+    spark.catalog.clearCache()
+    if fails:
+        with pytest.raises(RuntimeError, match="stage failed"):
+            call()
+    else:
+        call()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_corpus_curation_releases_caches_when_a_hygiene_stage_raises(
+    spark, sf_dir, tmp_path
+):
+    """A decontamination bench without a ``text`` column fails after the
+    quality/lang stage is cached and counted; the cache is released."""
+    from pyspark.errors import AnalysisException
+
+    bench = spark.createDataFrame([(1,)], "bench_id long")
+    spark.catalog.clearCache()
+    with pytest.raises(AnalysisException):
+        pipelines.run_corpus_curation_pipeline(
+            spark, sf_dir, str(tmp_path), decontam_bench=bench
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_batch_and_incremental_crawl_cleaning_agree(spark, tmp_path):
+    """Pages without duplicate content clean to the same documents rows
+    through run_crawl_preprocess_pipeline and through a first
+    run_incremental_crawl_ingest into empty state, under the same
+    robots, blocklist and script gates."""
+    raw, robots = _crawl_pages(spark), _robots(spark)
+    gates = dict(
+        robots_df=robots, blocklist_terms=("forbiddenword",), min_latin_fraction=0.5
+    )
+    pre = pipelines.run_crawl_preprocess_pipeline(spark, raw, str(tmp_path / "pre"), **gates)
+    inc = pipelines.run_incremental_crawl_ingest(spark, raw, str(tmp_path / "st"), **gates)
+    assert pre["n_preprocessed"] == inc["n_accepted"] == 12
+    cols = ["doc_id", "text", "lang", "source", "n_chars", "url_canonical", "domain"]
+
+    def rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).select(*cols).collect())
+
+    assert rows(str(tmp_path / "pre" / "documents.parquet")) == rows(
+        str(tmp_path / "st" / "accepted_docs")
+    )
