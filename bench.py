@@ -1,18 +1,14 @@
 """Benchmark harness — runs every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and prints TWO JSON lines:
+(default /root/testdata/sf0.1), each from a cold start, and prints TWO
+JSON lines:
 
-  line 1: the full detail object (per-query times, anchor list,
+  line 1: the full detail object (per-query times, anchor lines,
           methodology) — also written to BENCH_DETAIL.json next to this
-          file so the numbers survive stdout capture limits.
+          file.
   line 2 (FINAL): a compact metrics object (metric, value,
           anchor_subset_total, anchor ratio, reps, sf, 12 slowest
-          queries) kept well under 1.5 kB.
-
-The split exists because the round-8 driver handoff captured only the
-LAST 2000 characters of stdout and parsed the last line within it — the
-old single ~7 kB line got head-truncated and transmitted zero numbers
-(BENCH_r08.json "parsed": null). The FINAL line is now guaranteed to fit
-whole inside any tail capture >= ~1.2 kB.
+          queries) kept under 1.5 kB, so a reader that keeps only the
+          tail of stdout still gets it whole.
 
 Execution is forced with a noop datasource write (full pipeline runs on
 executors, nothing collects to the driver), which is what a sink-bound
@@ -33,23 +29,14 @@ from eligibility_etl_airflow_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # best-of-N damps the single-machine contention noise documented in
-# SCALING.md (same code measured 86-108 s across idle-box reps in r2/r3
-# adjudication); min-of-reps is the standard steady-state estimator
+# SCALING.md; min-of-reps is the standard steady-state estimator
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-# ISOLATED=1 flips to attribution mode: clearCache before EVERY query,
-# so each line is that query's standalone cold cost (persisted
-# intermediates are rebuilt per query instead of shared). Totals under
-# this mode are NOT comparable with the default suite-mode numbers —
-# use it to attribute a regression to one query, not as the cross-round
-# metric.
-ISOLATED = os.environ.get("SPARK_GRAFT_BENCH_ISOLATED", "") == "1"
 
 # The 61 queries registered in round 1 (recovered from the registry at the
 # round-1 snapshot commit, 5fa23a0~1; BENCH_r01 total 84.2918 s at sf0.1).
-# The raw suite total grows with the registry (155 queries by round 7 —
-# 2.54x the anchor's query count), so it measures coverage, not engine
-# speed. anchor_subset_total pins the SAME work across every round: the
-# sum over exactly these 61 lines is the cross-round performance series.
+# The raw suite total grows with the registry, so it measures coverage,
+# not engine speed. anchor_subset_total pins the SAME work across every
+# round: the sum over exactly these 61 lines is the cross-round series.
 ANCHOR_R1_QUERIES = (
     "age_birthday_corrected", "anti_join_resume", "approx_distinct_sketch",
     "asof_join_events", "beneficiary_enrichment", "business_rule_updates",
@@ -94,41 +81,18 @@ def main() -> None:
     warm = registry.QUERIES["eligibility_flagship"]
     run_query(warm, spark, SF_DIR)
 
+    # Every query starts cold: no relation in Spark's cache manager and
+    # no Python-side memo (trained models, centroids — registry.
+    # reset_memos), so each line is that query's standalone cost and
+    # min-of-reps compares like with like.
     times: dict[str, float] = {}
     for _ in range(max(1, REPS)):
-        # rep boundary: drop persisted relations (shingle tables etc.) AND
-        # every Python-side memo (trained models, centroid caches — r11:
-        # registry.reset_memos, the r10 verdict's cold-rep fix) so every
-        # rep is the same cold-session pass and min-of-reps compares
-        # like with like — otherwise queries that persist intermediates
-        # or memoize a trained model get a warm second rep while the rest
-        # stay cold, and the summed total mixes two methodologies.
-        # WITHIN a rep, cross-query cache reuse stays (a real session
-        # runs the suite that way, and it is the single-pass methodology
-        # of the earlier rounds' numbers).
-        spark.catalog.clearCache()
-        registry.reset_memos()
         for name in sorted(registry.QUERIES):
-            if ISOLATED:
-                # attribution mode: every query pays its own full cost
-                spark.catalog.clearCache()
-                registry.reset_memos()
+            spark.catalog.clearCache()
+            registry.reset_memos()
             t = round(run_query(registry.QUERIES[name], spark, SF_DIR), 4)
             times[name] = min(times.get(name, t), t)
-
-    # anchor-subset pass: a SEPARATE cold run of exactly the 61 round-1
-    # queries, so the total is genuinely same-work vs BENCH_r01 (84.29 s
-    # ran only these 61, sorted, shared-cache within the pass). Summing
-    # the anchor lines out of the full-suite run above would be biased
-    # low: alphabet-early NON-anchor queries registered since round 1
-    # absorb shared persisted builds the round-1 total necessarily paid.
-    anchor_times: dict[str, float] = {}
-    for _ in range(max(1, REPS)):
-        spark.catalog.clearCache()
-        registry.reset_memos()
-        for name in sorted(ANCHOR_R1_QUERIES):
-            t = round(run_query(registry.QUERIES[name], spark, SF_DIR), 4)
-            anchor_times[name] = min(anchor_times.get(name, t), t)
+    anchor_times = {name: times[name] for name in sorted(ANCHOR_R1_QUERIES)}
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -139,59 +103,23 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "anchor_queries": anchor_times,
-        # SAME-WORK cross-round series: a separate cold pass of
-        # the pinned 61 round-1 queries only (see the comment at
-        # the anchor pass). The raw suite total above grows with
-        # registry coverage (156+ queries vs the anchor's 61) and
-        # is NOT a speed series; compare THIS field against
-        # anchor_r1_total_sec (84.29 s) for the <2x-of-baseline
-        # performance bar.
+        # SAME-WORK cross-round series: the pinned 61 round-1 queries'
+        # lines. Compare THIS field against anchor_r1_total_sec.
         "anchor_subset_total": round(sum(anchor_lines), 4),
         "anchor_subset_n": len(anchor_lines),
         "anchor_r1_total_sec": ANCHOR_R1_TOTAL_SEC,
         "anchor_subset_queries": list(ANCHOR_R1_QUERIES),
         "reps": max(1, REPS),
-        "isolated": ISOLATED,
         "methodology": (
-                    (
-                        "ISOLATED attribution mode (clearCache before "
-                        "every query): each line is a standalone cold "
-                        "cost; totals are NOT comparable with suite-mode "
-                        "rounds. "
-                        if ISOLATED
-                        else ""
-                    )
-                    + "best-of-N cold reps (clearCache + registry."
-                    "reset_memos at rep boundary — r11: Python-side "
-                    "trained-model/centroid memos clear too, so EVERY "
-                    "rep pays in-query training, per the cold-rep "
-                    "contract); "
-                    "WITHIN a rep persisted intermediates are shared "
-                    "across queries, so per-query lines are not "
-                    "standalone costs (whichever neardup query runs "
-                    "first alphabetically pays the shingle build) — "
-                    "only the suite total is comparable across rounds; "
-                    "set SPARK_GRAFT_BENCH_ISOLATED=1 for standalone "
-                    "per-query attribution. Measured size of that "
-                    "attribution effect (round-7 judge standalone "
-                    "best-of-2 vs in-suite lines): contrastive_triplets "
-                    "8.71 s standalone vs 11.98 in-suite, "
-                    "cluster_representatives 2.17 vs 4.07, "
-                    "containment_pairs 2.74 vs 3.90 — in-suite lines "
-                    "for alphabet-early heavy queries absorb shared "
-                    "builds that later queries reuse. "
-                    "contrastive_triplets is the suite's largest single "
-                    "line by design: its cost is quadratic in the LSH "
-                    "bucket cap (cap=32 here; cap=200 is ~5x slower at "
-                    "~10% more triplet yield — the knob is documented "
-                    "in operators/contrastive.py). lang_id_learned "
-                    "TRAINS inside the query (registration contract: "
-                    "each query is self-contained), so its line carries "
-                    "a driver GD solve + bounded sample collect that a "
-                    "production caller pays once per model, not per "
-                    "scoring run — sample_size=512 is its cost knob "
-            "(2048 was ~8-10 s; the collect of sparse feature "
-            "rows dominates)"
+            "best-of-N reps; every query starts cold (clearCache + "
+            "registry.reset_memos before each), so each line is a "
+            "standalone cost and a query's trained models are rebuilt "
+            "in every run. contrastive_triplets' cost is quadratic in "
+            "the LSH bucket cap (cap=32 here; the knob is documented in "
+            "operators/contrastive.py). lang_id_learned trains inside "
+            "the query, so its line carries a driver GD solve + bounded "
+            "sample collect that a production caller pays once per "
+            "model (sample_size=512 is its cost knob)"
         ),
         "sf": sf_val,
     }
@@ -208,8 +136,8 @@ def main() -> None:
     except OSError:
         pass  # read-only checkout: stdout line 1 still carries the detail
 
-    # FINAL line: compact metrics only. The driver tail-captures ~2 kB of
-    # stdout and parses the last line — this object must always fit whole.
+    # FINAL line: compact metrics only; it must fit whole in a ~2 kB tail
+    # of stdout, where a reader parses the last line.
     total = round(sum(times.values()), 4)
     anchor_total = round(sum(anchor_lines), 4)
     slowest = dict(sorted(times.items(), key=lambda kv: -kv[1])[:12])
@@ -220,7 +148,6 @@ def main() -> None:
         "sf": sf_val,
         "n_queries": len(times),
         "reps": max(1, REPS),
-        "isolated": ISOLATED,
         "anchor_subset_total": anchor_total,
         "anchor_subset_n": len(anchor_lines),
         "anchor_r1_total_sec": ANCHOR_R1_TOTAL_SEC,
@@ -230,17 +157,16 @@ def main() -> None:
         "times + methodology are on the preceding stdout line and in "
         "BENCH_DETAIL.json",
     }
-    # keep the line under the driver's ~2 kB tail-capture: shed slowest-
-    # query entries rather than aborting AFTER the whole suite already
-    # ran (an assert here would lose the run's numbers — and vanish
-    # under python -O)
+    # keep the line under that ~2 kB tail: shed slowest-query entries
+    # rather than aborting AFTER the whole suite already ran (an assert
+    # here would lose the run's numbers — and vanish under python -O)
     out = json.dumps(compact)
     while len(out) >= 1500 and compact["queries"]:
         dropped = list(compact["queries"])[-1]
         del compact["queries"][dropped]
         compact["queries_note"] = (
             f"{len(compact['queries'])} slowest (truncated to fit the "
-            "driver line cap); full detail in BENCH_DETAIL.json"
+            "line cap); full detail in BENCH_DETAIL.json"
         )
         print(
             f"bench: compact line over 1500 B, dropping {dropped}",

@@ -48,7 +48,7 @@ def nanos_timestamp_columns(path: str) -> list[str]:
     ]
 
 
-# Session-scoped relation cache: (path, mtime, size) -> DataFrame, per
+# Session-scoped relation cache: path -> ((mtime, size), DataFrame), per
 # SparkSession (weak-keyed so a stopped session's entries die with it).
 # A metastore-backed deployment gets this for free — resolving a catalog
 # table does not re-list files or re-probe footers on every query — and
@@ -58,8 +58,9 @@ def nanos_timestamp_columns(path: str) -> list[str]:
 # trivial query's wall time was re-deriving immutable metadata. Only the
 # *unresolved relation* (logical plan + schema) is cached — execution
 # still scans the parquet files fresh on every action, so bench/oracle
-# runs always compute from the inputs; the (mtime, size) key drops the
-# entry the moment a file is rewritten.
+# runs always compute from the inputs; a changed (mtime, size) stamp
+# replaces the path's entry, so a rewritten file is read afresh and the
+# cache holds one entry per path however often it is rewritten.
 _RELATION_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -91,13 +92,15 @@ class Catalog:
     def table(self, name: str) -> DataFrame:
         if name not in self._cache:
             path = os.path.join(self.sf_dir, f"{name}.parquet")
+            key = os.path.abspath(path)
             try:
-                key = (os.path.abspath(path), _file_stamp(path))
+                stamp = _file_stamp(path)
             except OSError:
-                key = None  # vanished/racing file: let the read raise below
+                stamp = None  # vanished/racing file: let the read raise below
             per_session = _RELATION_CACHE.setdefault(self.spark, {})
-            if key is not None and key in per_session:
-                self._cache[name] = per_session[key]
+            hit = per_session.get(key)
+            if stamp is not None and hit is not None and hit[0] == stamp:
+                self._cache[name] = hit[1]
                 return self._cache[name]
             # nanosAsLong is a runtime-settable SQL conf; set it here (not
             # only at session build) so a caller-supplied SparkSession —
@@ -114,8 +117,8 @@ class Catalog:
                     col,
                     F.timestamp_micros(F.expr(f"`{col}` div 1000")),
                 )
-            if key is not None:
-                per_session[key] = df
+            if stamp is not None:
+                per_session[key] = (stamp, df)
             self._cache[name] = df
         return self._cache[name]
 

@@ -6,20 +6,38 @@ tests/test_plan_shape.py for the built-in queries; this module exposes
 the same checks to users composing their OWN plans from the operators,
 so "would this survive 100 TB" is a function call, not a code review.
 
-The plan checks read the *executed* plan string — the physical plan
-after AQE planning, which is what actually runs. ``codegen_stats`` reads
-the JVM's code-generation counters.
+The plan checks walk the nodes of the *executed* plan — the physical
+plan after AQE planning, which is what actually runs — through py4j, so
+no plan-string cap (``spark.sql.maxPlanStringLength``) can hide a node.
+``codegen_stats`` reads the JVM's code-generation counters.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
 
-def _plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+_FILE_SCANS = ("FileSourceScanExec", "BatchScanExec")
+
+
+def _plan_nodes(df: DataFrame):
+    """Every node of the executed plan: AQE's current (after an action,
+    final) plan, each query stage's plan, the plans of cached relations
+    and of subqueries."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        yield node, name
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
 
 
 @dataclass(frozen=True)
@@ -29,8 +47,8 @@ class PlanSummary:
     exchanges: int  # shuffles — each is a full network round of the data
     broadcast_exchanges: int  # small-side broadcasts (cheap, good)
     # fused JVM pipeline spans (good). NOTE: an un-executed AQE plan
-    # prints isFinalPlan=false WITHOUT codegen markers — this count is
-    # only meaningful after an action ran, or with AQE off
+    # holds no codegen nodes yet — this count is only meaningful after
+    # an action ran, or with AQE off
     wholestage_codegen: int
     arrow_eval_python: int  # vectorized Python islands (acceptable)
     batch_eval_python: int  # row-at-a-time Python (the slow path — avoid)
@@ -46,17 +64,25 @@ class PlanSummary:
 
 def plan_summary(df: DataFrame) -> PlanSummary:
     """Summarize the physical plan's scale-relevant features."""
-    p = _plan(df)
+    names: Counter = Counter()
+    scans = pushed = 0
+    for node, name in _plan_nodes(df):
+        names[name.split(" ")[0]] += 1
+        if node.getClass().getSimpleName() in _FILE_SCANS:
+            scans += 1
+            meta = node.metadata()
+            if meta.contains("PushedFilters") and meta.apply("PushedFilters") != "[]":
+                pushed += 1
     return PlanSummary(
-        exchanges=p.count("Exchange") - p.count("BroadcastExchange"),
-        broadcast_exchanges=p.count("BroadcastExchange"),
-        wholestage_codegen=p.count("WholeStageCodegen"),
-        arrow_eval_python=p.count("ArrowEvalPython"),
-        batch_eval_python=p.count("BatchEvalPython"),
-        sort_merge_joins=p.count("SortMergeJoin"),
-        broadcast_hash_joins=p.count("BroadcastHashJoin"),
-        scans=p.count("FileScan") + p.count("BatchScan"),
-        pushed_filter_scans=p.count("PushedFilters: ["),
+        exchanges=names["Exchange"],
+        broadcast_exchanges=names["BroadcastExchange"],
+        wholestage_codegen=names["WholeStageCodegen"],
+        arrow_eval_python=names["ArrowEvalPython"],
+        batch_eval_python=names["BatchEvalPython"],
+        sort_merge_joins=names["SortMergeJoin"],
+        broadcast_hash_joins=names["BroadcastHashJoin"],
+        scans=scans,
+        pushed_filter_scans=pushed,
     )
 
 

@@ -51,16 +51,7 @@ def js_divergence_by_slice(
             )
         ).alias("tok"),
     )
-    from pyspark import StorageLevel
-
-    # slice-x-vocab-sized with THREE consumers (per-slice totals, global
-    # counts, the scoring join) — persisted so each does not re-run the
-    # corpus scan + explode + aggregate that builds it
-    sc = (
-        toks.groupBy("slice", "tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sc = toks.groupBy("slice", "tok").agg(F.count(F.lit(1)).alias("c"))
     stot = sc.groupBy("slice").agg(
         F.sum("c").alias("n_slice"), F.count(F.lit(1)).alias("vocab_slice")
     )

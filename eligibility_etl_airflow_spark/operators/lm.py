@@ -62,19 +62,10 @@ def unigram_nll_scores(
     the smoothed floor ``1 / (total + vocab + 1)`` via an outer join —
     absence is evidence, not an error.
     """
-    from pyspark import StorageLevel
-
     toks = _token_stream(df, id_col, text_col)
-    # the self-model is vocab-sized and has two consumers (the totals
-    # aggregate and the scoring join) — without a persist each consumer
-    # re-runs the corpus scan + explode + aggregate that builds it.
-    # Persisting a vocab-sized relation is always cheap; the corpus-
-    # sized token stream deliberately stays unpersisted (recompute is
-    # the right trade there). Cache lifecycle contract as elsewhere:
-    # clearCache() between corpora on a long-lived driver.
     m = model if model is not None else toks.groupBy("tok").agg(
         F.count(F.lit(1)).alias("tok_count")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     totals = m.agg(
         F.sum("tok_count").alias("total_toks"),
         F.count(F.lit(1)).alias("vocab_size"),
@@ -160,15 +151,8 @@ def bigram_nll_scores(
     """
     if not (0.0 <= lam < 1.0):
         raise ValueError(f"lam must be in [0, 1), got {lam}")
-    from pyspark import StorageLevel
-
     stream = _bigram_stream(df, id_col, text_col)
-    # vocab-sized, THREE consumers (totals, w1 join, w2 join) — each
-    # would otherwise re-run its corpus scan + explode + aggregate.
-    # The corpus-sized bigram stream stays unpersisted by design (its
-    # two consumers re-scan; materializing it would cost more than the
-    # scans it saves).
-    uni = unigram_model(df, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    uni = unigram_model(df, id_col, text_col)
     # derive the bigram counts from the SAME stream being scored — one
     # corpus pass fewer than rebuilding pairs via bigram_model
     bi = stream.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("pair_count"))

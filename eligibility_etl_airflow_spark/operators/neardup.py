@@ -33,6 +33,7 @@ from eligibility_etl_airflow_spark.operators.parallel import (  # noqa: E402
     ensure_parallelism as _ensure_parallelism,
     parse_byte_size as _parse_byte_size,
 )
+from eligibility_etl_airflow_spark.sources.sinks import _stable  # noqa: E402
 
 
 def hashed_shingles_of_norm(norm: Column, k: int = 5) -> Column:
@@ -363,8 +364,6 @@ def minhash_lsh_pairs(
     via :func:`choose_lsh_bands` (S-curve integrated-error minimizer)
     instead of the hand-picked default.
     """
-    from pyspark import StorageLevel
-
     if bands is None:
         bands, _ = choose_lsh_bands(jaccard_threshold, num_perm)
 
@@ -377,22 +376,8 @@ def minhash_lsh_pairs(
     # exact-verification join — a 3σ margin below the threshold keeps
     # true near-dups with ~99.9% probability while discarding the
     # low-similarity bulk that dominates candidate volume.
-    # The hashed-shingle relation feeds BOTH the signature derivation and
-    # the exact-Jaccard verification join; persisted (disk-spillable) so
-    # the corpus is scanned + normalized + shingled exactly once instead
-    # of twice. At cluster scale this trades one full text pass for
-    # shingle-array storage ≈ a few × corpus size, the standard dedup
-    # pipeline trade (the alternative recompute pass rereads the corpus).
-    # Cache lifecycle: Spark's CacheManager dedupes by analyzed plan, so
-    # repeated invocations over the same input reuse ONE entry; distinct
-    # corpora leave entries behind until LRU eviction — a long-lived
-    # driver cycling many corpora should spark.catalog.clearCache()
-    # between jobs (disk-spillable storage level bounds the memory side).
-    shingle_tab = shingle_table(df, id_col, text_col, shingle_k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
     return lsh_pairs_from_shingles(
-        shingle_tab,
+        shingle_table(df, id_col, text_col, shingle_k),
         num_perm=num_perm,
         bands=bands,
         jaccard_threshold=jaccard_threshold,
@@ -543,9 +528,7 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """n-gram Jaccard for every pair inside a blocking key (e.g. same
     language + length bucket). Blocking bounds the pair count; the join
-    shuffles once on the block key. The shingled relation is persisted
-    because BOTH sides of the self-join consume it — without it the
-    scan + normalize + shingling lineage executes twice.
+    shuffles once on the block key.
 
     ``hashed=True`` (default) compares 64-bit-hashed shingle sets —
     exact up to xxhash64 collision-freeness (w.h.p.; a collision would
@@ -1059,17 +1042,14 @@ def minhash_lsh_pairs_bipartite(
     the self-join's bucket cap): a junk band on the broadcast side
     would fan every matching corpus row out |bench| ways.
     """
-    from pyspark import StorageLevel
-
     est_margin = 3.0 * (0.25 / num_perm) ** 0.5
     est_floor = jaccard_threshold - est_margin
 
-    sh_c = shingle_table(corpus, id_col, text_col, shingle_k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sh_b = shingle_table(bench, id_col, text_col, shingle_k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # the corpus shingles feed the signatures and the verification join:
+    # materialized once, or the corpus is shingled twice; the small
+    # bench side is cheaper to recompute than to materialize
+    sh_c = _stable(shingle_table(corpus, id_col, text_col, shingle_k))
+    sh_b = shingle_table(bench, id_col, text_col, shingle_k)
     band_c = signature_band_table(sh_c, num_perm, bands).select(
         F.col("id").alias("corpus_id"),
         F.col("sig").alias("sig_c"),
@@ -1138,12 +1118,10 @@ def _rarity_ordered_docsets(df, id_col, text_col, shingle_k):
 
     Returns ``(toks, docsets)`` — ``toks`` = distinct (id, tok),
     ``docsets`` = (id, toks array ordered rarest-first with lexical
-    tie-break, dlen). Both persisted (each has 2-3 consumers in every
-    caller); cache lifecycle is the caller's, same contract as
-    ``minhash_lsh_pairs``."""
+    tie-break, dlen). Both are materialized once (``sinks._stable``):
+    each has 2-3 consumers in every caller."""
     import numpy as np
     import pandas as pd
-    from pyspark import StorageLevel
 
     staged = _with_normalized_text(df, id_col, text_col)
     id_type = staged.schema["id"].dataType.simpleString()
@@ -1185,10 +1163,8 @@ def _rarity_ordered_docsets(df, id_col, text_col, shingle_k):
                 toks_out.extend(t.decode("utf-8") for t in seen)
             yield pd.DataFrame({"id": ids, "tok": toks_out})
 
-    toks = (
-        staged.mapInPandas(_shingle, schema=f"id {id_type}, tok string")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    toks = _stable(
+        staged.mapInPandas(_shingle, schema=f"id {id_type}, tok string").distinct()
     )
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("tok_freq"))
     # Global canonical order: rarest token first, lexical tie-break.
@@ -1197,8 +1173,8 @@ def _rarity_ordered_docsets(df, id_col, text_col, shingle_k):
     # it. This single per-id shuffle replaces the join + row_number
     # window + separate verification-set aggregate shape (three id- or
     # sort-keyed exchanges) — the docsets relation then serves BOTH the
-    # prefix explode and the verification joins, so it is persisted.
-    docsets = (
+    # prefix explode and the verification joins.
+    docsets = _stable(
         toks.join(freq, "tok")
         .groupBy("id")
         .agg(
@@ -1209,7 +1185,6 @@ def _rarity_ordered_docsets(df, id_col, text_col, shingle_k):
             F.transform("ordered", lambda x: x["tok"]).alias("toks"),
             F.size("ordered").alias("dlen"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     return toks, docsets
 
@@ -1256,17 +1231,7 @@ def set_similarity_join(
     ``threshold`` is interpreted at 6-decimal precision (t = round(t·1e6)/1e6)
     so every comparison runs in exact integer arithmetic — see the t_num
     note in the body.
-
-    The distinct (id, shingle) relation is persisted — three consumers
-    (frequency aggregate, prefix ordering, verification sets) would
-    otherwise re-run the scan + normalize + shingle explode three
-    times. Cache lifecycle contract is the same as
-    ``minhash_lsh_pairs``: repeated invocations over one corpus reuse a
-    single entry; a long-lived driver cycling corpora should
-    ``spark.catalog.clearCache()`` between jobs.
     """
-    from pyspark import StorageLevel
-
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     if shingle_k < 1:
@@ -1379,8 +1344,7 @@ def containment_join(
     Threshold arithmetic is exact 6-dp integer (the
     ``set_similarity_join`` discipline). Output: (id_a, id_b,
     inter_size, len_a, len_b) integers + both directions' containment
-    rounded 6 dp; id_a < id_b. Cache lifecycle as in
-    ``set_similarity_join``.
+    rounded 6 dp; id_a < id_b.
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
@@ -1405,7 +1369,7 @@ def containment_join(
         ).alias("tok"),
     )
     # contained-candidate prefix ⋈ FULL postings of potential containers
-    # (the persisted toks relation IS the full inverted index). A
+    # (the toks relation IS the full inverted index). A
     # partner-length restriction (only >=-sized docs can contain X) was
     # measured and REJECTED: attaching the partner's length to the raw
     # candidate stream costs a join wider than the verify it would

@@ -172,8 +172,7 @@ def assign_token_shards(
     sum per partition to the driver, broadcast cumulative offsets,
     partition-local running-sum window). No single-partition
     ``Window.orderBy()`` collapse anywhere; the only all-to-all
-    movement is the range shuffle itself. Cache lifecycle belongs to
-    the caller, same contract as ``assign_contiguous_ids``.
+    movement is the range shuffle itself.
 
     ``order_by`` must be a total order; null or negative token counts
     are rejected loudly (a silent 0 would shift every later shard).

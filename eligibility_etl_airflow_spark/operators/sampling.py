@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from eligibility_etl_airflow_spark.sources.sinks import _stable
+
 
 def resample_to_mix(
     df: DataFrame,
@@ -166,27 +168,21 @@ def ranged_partition_offsets(
     broadcast-sized ``(_pid, _offset)`` exclusive cumulative offsets.
 
     The invariants both callers rely on live here ONCE: ``part`` is
-    persisted so the scalar pass and the caller's window pass see the
-    SAME physical partitioning (spark_partition_id is a physical
-    property — recomputing the range shuffle between actions would
-    re-sample its boundaries); the driver transfer is bounded by the
-    partition count, never the data; an empty input yields the
-    ``(0, 0)`` placeholder row; the offsets ship as a broadcast-join
-    relation, not a plan-sized ``create_map`` literal. Cache lifecycle
-    belongs to the caller (same contract as the near-dup pair
-    generators)."""
+    materialized (``sinks._stable``) so the scalar pass and the caller's
+    window pass see the SAME physical partitioning (spark_partition_id
+    is a physical property — recomputing the range shuffle between
+    actions would re-sample its boundaries); the driver transfer is
+    bounded by the partition count, never the data; an empty input
+    yields the ``(0, 0)`` placeholder row; the offsets ship as a
+    broadcast-join relation, not a plan-sized ``create_map`` literal."""
     if not order_by:
         raise ValueError("order_by must name at least one column")
-    from pyspark import StorageLevel
-
     ranged = (
         df.repartitionByRange(num_partitions, *order_by)
         if num_partitions
         else df.repartitionByRange(*order_by)
     )
-    part = ranged.withColumn("_pid", F.spark_partition_id()).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    part = _stable(ranged.withColumn("_pid", F.spark_partition_id()))
     scalars = sorted(
         (r["_pid"], r["v"])
         for r in part.groupBy("_pid").agg(scalar_agg.alias("v")).collect()
@@ -223,12 +219,8 @@ def assign_contiguous_ids(
     ``order_by`` must be a total order (include a unique tiebreaker);
     ties would make ids run-dependent.
 
-    The ranged relation is persisted (MEMORY_AND_DISK) so the count pass
-    and the id pass see the SAME partitioning — spark_partition_id is a
-    physical property, and recomputing the range shuffle between the two
-    actions would re-sample its boundaries. Cache lifecycle belongs to
-    the caller (unpersist via ``spark.catalog.clearCache()`` or let LRU
-    evict), same contract as the near-dup pair generators.
+    The ranged relation is materialized once so the count pass and the
+    id pass see the SAME partitioning (see ``ranged_partition_offsets``).
     """
     from pyspark.sql.window import Window
 

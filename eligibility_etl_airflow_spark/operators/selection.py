@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eligibility_etl_airflow_spark.operators import lm
+from eligibility_etl_airflow_spark.sources.sinks import _stable
 
 
 def importance_log_weights(
@@ -42,22 +43,12 @@ def importance_log_weights(
     tokens take the smoothed floor on whichever side lacks them
     (absence is evidence). Positive log_weight = looks more like the
     target than like the raw corpus."""
-    from pyspark import StorageLevel
-
     toks = lm._token_stream(corpus, id_col, text_col)
-    # both models are vocab-sized with two consumers each (their totals
-    # aggregate and the scoring join) — persisted so neither consumer
-    # re-runs the corpus/target scan that builds the counts; the
-    # corpus-sized token stream stays unpersisted (recompute trade)
-    src = (
-        lm.unigram_model(corpus, id_col, text_col)
-        .withColumnRenamed("tok_count", "src_count")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    src = lm.unigram_model(corpus, id_col, text_col).withColumnRenamed(
+        "tok_count", "src_count"
     )
-    tgt = (
-        lm.unigram_model(target, id_col, text_col)
-        .withColumnRenamed("tok_count", "tgt_count")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    tgt = lm.unigram_model(target, id_col, text_col).withColumnRenamed(
+        "tok_count", "tgt_count"
     )
     src_tot = src.agg(
         F.sum("src_count").alias("src_total"), F.count(F.lit(1)).alias("src_vocab")
@@ -154,10 +145,7 @@ def rank_normalize_blend(
     join on the value), skew every other row's percentile (the null
     group still counts in the running sum), and diverge across engines
     (Spark orders nulls first, DuckDB last). Coalesce or filter
-    upstream, deliberately. Cache lifecycle: the staged signal relation
-    is persisted for its per-signal consumers and left to Spark's LRU /
-    ``spark.catalog.clearCache()`` — the ``minhash_lsh_pairs``
-    contract.
+    upstream, deliberately.
     """
     from pyspark.sql.window import Window
 
@@ -171,12 +159,10 @@ def rank_normalize_blend(
     if any(v < 0 for v in w.values()) or sum(w.values()) <= 0:
         raise ValueError(f"weights must be >= 0 with a positive sum, got {w}")
 
-    from pyspark import StorageLevel
-
-    # persisted: the staged signal relation feeds one value-aggregate
-    # and one join-back PER SIGNAL — without the cache every consumer
-    # re-runs the (typically regex-heavy) signal expressions over the
-    # corpus; the count() below materializes it
+    # materialized once: the staged signal relation feeds one
+    # value-aggregate and one join-back PER SIGNAL — otherwise every
+    # consumer re-runs the (typically regex-heavy) signal expressions
+    # over the corpus
     def _guarded(name: str, c):
         return F.when(
             c.isNull(),
@@ -189,10 +175,12 @@ def rank_normalize_blend(
             ),
         ).otherwise(c)
 
-    cur = df.select(
-        F.col(id_col),
-        *[_guarded(name, c).alias(name) for name, c in signals.items()],
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    cur = _stable(
+        df.select(
+            F.col(id_col),
+            *[_guarded(name, c).alias(name) for name, c in signals.items()],
+        )
+    )
     n = cur.count()  # one scalar to the driver — the rank denominator
     denom = float(max(n - 1, 1))
     for name in signals:

@@ -50,6 +50,7 @@ from eligibility_etl_airflow_spark.operators.similarity import (
     nearest_centroid_assign,
     train_ivf_centroids,
 )
+from eligibility_etl_airflow_spark.sources.sinks import _stable
 
 
 def centroids_as_df(spark, cents: list[list[float]]) -> DataFrame:
@@ -154,9 +155,9 @@ def semantic_dedup_drops(
     paper's operating regime. Costs one extra column-pruned count of
     ``df``; ignored when ``centroids`` is passed.
 
-    Plan: broadcast-assign (persisted — the assignment feeds the size
-    count, the capped report, and the member collect; same cache
-    contract as ``minhash_lsh_pairs``' shingle table) → cluster sizes
+    Plan: broadcast-assign (materialized once with ``sinks._stable`` —
+    the assignment feeds the size count, the capped report, and the
+    member collect) → cluster sizes
     counted from the VECTORLESS assignment relation, so an over-cap
     cluster is detected and reported without ever materializing its
     members' embeddings into one row (a million-member cluster must
@@ -167,7 +168,6 @@ def semantic_dedup_drops(
     as ``kept_id``."""
     import numpy as np
     import pandas as pd
-    from pyspark import StorageLevel
 
     if not (0.0 < eps <= 1.0):
         raise ValueError(f"eps must be in (0, 1], got {eps}")
@@ -182,10 +182,10 @@ def semantic_dedup_drops(
     vecs = df.select(
         F.col(id_col).alias("id"), as_double_array(F.col(vec_col)).alias("v")
     )
-    assigned = (
-        nearest_centroid_assign(vecs, cents, "id", "v")
-        .select("id", F.col("assigned_label").cast("long").alias("cluster"), "sim")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    assigned = _stable(
+        nearest_centroid_assign(vecs, cents, "id", "v").select(
+            "id", F.col("assigned_label").cast("long").alias("cluster"), "sim"
+        )
     )
     id_type = vecs.schema["id"].dataType.simpleString()
     over_cap = (
@@ -307,13 +307,11 @@ def semantic_dedup_drops_bipartite(
         # merge hint: array-broadcast guard (see kmeans_centroids)
         return vecs.hint("merge").join(a, "id")
 
-    from pyspark import StorageLevel
-
-    # batch-side assignment persists: it feeds the size counts, the
-    # capped report, and the cogroup. The state side is only ever read
-    # through column-pruned projections (cluster for the count, the
-    # cogroup for the compare) — no persist of the big side.
-    b = assigned(batch).persist(StorageLevel.MEMORY_AND_DISK)
+    # batch-side assignment is materialized once: it feeds the size
+    # counts, the capped report, and the cogroup. The state side is only
+    # ever read through column-pruned projections (cluster for the
+    # count, the cogroup for the compare) — the big side stays lazy.
+    b = _stable(assigned(batch))
     s = assigned(state)
 
     # over-cap detection from VECTORLESS projections, before any group

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from eligibility_etl_airflow_spark.sources.sinks import _stable
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -367,31 +369,22 @@ def embedding_neardup_pairs(
     generator here: one all-alike bucket (e.g. a zero-vector cluster)
     would otherwise expand quadratically at corpus scale. With
     ``n_planes`` sign bits there are ≤ 2^n_planes buckets, so the
-    bucket-size relation is tiny and broadcast.
-
-    Cache lifecycle (same contract as ``minhash_lsh_pairs``): the
-    bucketed relation is persisted (disk-spillable) and deduped by
-    analyzed plan, so repeated invocations over the same input reuse ONE
-    entry; a long-lived driver cycling distinct corpora should
-    ``spark.catalog.clearCache()`` between jobs."""
-    from pyspark import StorageLevel
-
+    bucket-size relation is tiny and broadcast."""
     planes = hyperplanes(dim, n_planes, seed)
     # bucket assignment as ONE Arrow-batched matmul (same sign convention
     # as lsh_bucket; same rationale as lsh_topk — n_planes interpreted
     # higher-order dot products per row were ~3× slower at sf0.1).
-    # persisted: the bucketed relation feeds the bucket-size aggregate and
-    # BOTH sides of the self-join — without the persist the hyperplane
-    # projection (the expensive part) re-executes three times
+    # materialized once: the bucketed relation feeds the bucket-size
+    # aggregate and BOTH sides of the self-join — otherwise the
+    # hyperplane projection (the expensive part) re-executes in each
     bucket_udf = _bucket_matmul_udf([planes])
-    t = (
+    t = _stable(
         df.select(
             F.col(id_col).alias("id"),
             as_double_array(F.col(vec_col)).alias("vec"),
         )
         .withColumn("bucket", F.element_at(bucket_udf(F.col("vec")), 1))
         .withColumn("norm", _norm(F.col("vec")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     ok_buckets = (
         t.groupBy("bucket")
@@ -520,7 +513,7 @@ def pq_topk(
     practice for a bounded query batch, but data-proportional, so it is
     explicitly CHUNKED with a HARD CEILING: query rows stream to the
     driver via ``toLocalIterator`` and flush into a per-chunk plan every
-    ``max_queries`` rows, so raw-row memory is one chunk at a time —
+    ``max_queries`` rows, so raw-row memory is bounded by two chunks —
     but each flushed chunk's LUT tensor and query literals stay alive in
     the union plan's closures, so TOTAL driver memory is
     n_chunks × chunk-LUT, which is why ``max_chunks`` exists: past
@@ -528,12 +521,12 @@ def pq_topk(
     silently exhausting the driver (split the query relation and run
     separate jobs — at that scale per-job batches are the right shape
     anyway). The trained codebooks are computed once, and with >1 chunk
-    the encoded corpus relation persists so each chunk reuses one
-    scan+encode pass (same cache-lifecycle contract as
-    ``minhash_lsh_pairs``' shingle table)."""
+    the encoded corpus relation is materialized once (``sinks._stable``)
+    so each chunk reuses one scan+encode pass."""
     import numpy as np
     import pandas as pd
     from functools import reduce
+    from itertools import islice
     from pyspark.sql import Window
 
     books = train_pq_codebooks(
@@ -642,15 +635,21 @@ def pq_topk(
             )
         )
 
-    # Stream query rows and flush each chunk into its plan as it fills:
-    # raw Row memory is one chunk at a time (the buffer clears on flush);
-    # what accumulates is one LUT tensor + query literal per flushed
-    # chunk inside the union plan's closures — which max_chunks caps.
+    # Stream query rows one chunk at a time (raw Row memory is at most
+    # two chunks: the current one and the look-ahead); what accumulates
+    # is one LUT tensor + query literal per chunk inside the union
+    # plan's closures — which max_chunks caps.
+    rows = queries.select(
+        F.col(id_col).alias("query_id"),
+        as_double_array(F.col(vec_col)).alias("qvec"),
+    ).toLocalIterator()
+    chunk = list(islice(rows, max_queries))
+    nxt = list(islice(rows, max_queries))
+    if nxt:
+        # more than one chunk: encode the corpus once for all of them
+        c = _stable(c)
     plans: list[DataFrame] = []
-    buf: list = []
-
-    def flush() -> None:
-        nonlocal c
+    while chunk:
         if len(plans) >= max_chunks:
             raise ValueError(
                 f"pq_topk: query set exceeds max_queries × max_chunks = "
@@ -659,25 +658,8 @@ def pq_topk(
                 "with chunk count — split the query relation into "
                 "separate jobs at this scale."
             )
-        if len(plans) == 1:
-            # second chunk proves multi-chunk: persist the encoded corpus
-            # so every chunk (incl. the first — CacheManager keys on the
-            # analyzed plan) reuses one scan+encode pass
-            from pyspark import StorageLevel
-
-            c = c.persist(StorageLevel.MEMORY_AND_DISK)
-        plans.append(chunk_topk(list(buf)))
-        buf.clear()
-
-    for r in queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_array(F.col(vec_col)).alias("qvec"),
-    ).toLocalIterator():
-        buf.append(r)
-        if len(buf) == max_queries:
-            flush()
-    if buf:
-        flush()
+        plans.append(chunk_topk(chunk))
+        chunk, nxt = nxt, list(islice(rows, max_queries))
 
     empty_schema = f"query_id {id_type}, corpus_id {id_type}, sim double, rank long"
     if not plans:

@@ -320,22 +320,12 @@ def _blocked_jaccard_pairs(
     blocked 3-gram-Jaccard pair relation over it. FOUR registered
     queries consume the pair relation (``ngram_jaccard_pairs`` itself,
     ``dedup_connected_components``, ``cluster_representatives``,
-    ``leakage_safe_split``), so it is persisted (r10, guide §2.4/§5):
-    CacheManager dedupes by analyzed plan, so within one session the
-    shingle + bucket-collect + pairwise-intersection work runs once and
-    every consumer probes the cached rows — the shingle-table contract.
-    Lifecycle is LRU / the bench's rep-boundary clearCache; every fresh
-    process still computes from the parquet inputs."""
-    from pyspark import StorageLevel
-
+    ``leakage_safe_split``)."""
     d = Catalog(spark, sf_dir).documents.withColumn(
         "block",
         F.concat_ws("#", F.col("lang"), (F.col("n_chars") / 100).cast("long").cast("string")),
     )
-    pairs = neardup.ngram_jaccard_pairs(
-        d, "doc_id", "text", "block", shingle_k=3
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    return d, pairs
+    return d, neardup.ngram_jaccard_pairs(d, "doc_id", "text", "block", shingle_k=3)
 
 
 @query("ngram_jaccard_pairs", oracle=NGRAM_JACCARD_ORACLE)
@@ -1007,29 +997,17 @@ def blocked_component_labels(
     side and the composed oracles cannot drift apart.
 
     Returns ``(docs_with_block, labels)`` where labels is
-    (doc_id long, cluster_id long).
-
-    r10 (guide §2.4/§5): both the pair relation (via
-    ``_blocked_jaccard_pairs``) and the label relation are persisted —
-    three registered queries consume these labels, and before the
-    staging persist each of them recomputed the full shingle → pairwise
-    intersection → closure chain from the parquet scan."""
-    from pyspark import StorageLevel
-
+    (doc_id long, cluster_id long)."""
     from eligibility_etl_airflow_spark.operators import components
 
     d, pairs = _blocked_jaccard_pairs(spark, sf_dir)
     prs = pairs.filter(F.col("jaccard") >= 0.6)
-    labels = (
-        components.attach_components(
-            d.select(F.col("doc_id").cast("long").alias("doc_id")),
-            "doc_id",
-            prs,
-            block_col="block",
-        )
-        .select("doc_id", F.col("cluster_id").cast("long").alias("cluster_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    labels = components.attach_components(
+        d.select(F.col("doc_id").cast("long").alias("doc_id")),
+        "doc_id",
+        prs,
+        block_col="block",
+    ).select("doc_id", F.col("cluster_id").cast("long").alias("cluster_id"))
     return d, labels
 
 
@@ -1734,22 +1712,12 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     d = cat.documents
     e = cat.embeddings
-    # both rankings are <=20-row relations with TWO consumers (the
-    # fusion and the evidence join-back) — persisted, or each consumer
-    # re-runs the full retrieval lineage (3 corpus scans for BM25, the
-    # whole cosine scan for the ANN side)
-    lex = (
-        search.bm25_topk(d, "doc_id", "text", list(BM25_TERMS), k=20)
-        .select(F.col("id").cast("long").alias("doc_id"), F.col("rnk"))
-        .persist()
+    lex = search.bm25_topk(d, "doc_id", "text", list(BM25_TERMS), k=20).select(
+        F.col("id").cast("long").alias("doc_id"), F.col("rnk")
     )
-    sem = (
-        similarity.brute_force_topk(e, e.filter(F.col("vec_id") == 3), k=20)
-        .select(
-            F.col("corpus_id").cast("long").alias("doc_id"),
-            F.col("rank").alias("rnk"),
-        )
-        .persist()
+    sem = similarity.brute_force_topk(e, e.filter(F.col("vec_id") == 3), k=20).select(
+        F.col("corpus_id").cast("long").alias("doc_id"),
+        F.col("rank").alias("rnk"),
     )
     fused = search.rrf_fuse(
         [("lex", lex), ("sem", sem)], k=10, k_rrf=60, by=None, id_col="doc_id"

@@ -19,6 +19,7 @@ from eligibility_etl_airflow_spark.catalog import Catalog
 from eligibility_etl_airflow_spark.operators import packing, similarity, text
 from eligibility_etl_airflow_spark.plans.llm_pipeline import CC_ORACLE, QUALITY_ORACLE
 from eligibility_etl_airflow_spark.registry import query
+from eligibility_etl_airflow_spark.sources.sinks import _stable
 
 # --------------------------------------------------------------------------
 # Unicode NFC normalization — corpus hygiene ahead of any hash-based dedup
@@ -451,13 +452,7 @@ def merge_corpora_priority_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     split into three tiers by source number (the test vehicle for
     curated > books > crawl), merged back with highest-priority-wins
     per content hash, min doc_id tie-break. One union + one
-    hash-partitioned window — exact-dedup cost. The tiered relation is
-    persisted so the three filter branches probe one cached scan
-    instead of re-reading the parquet (and re-running the tier regex)
-    per corpus; lifecycle is left to LRU / the bench's clearCache (the
-    shingle-table contract — registered queries are self-contained)."""
-    from pyspark import StorageLevel
-
+    hash-partitioned window — exact-dedup cost."""
     from eligibility_etl_airflow_spark.operators import dedup
 
     # digit-less sources tier to 0 in BOTH engines (coalesce over
@@ -471,7 +466,7 @@ def merge_corpora_priority_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0),
         )
         % 3,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     corpora = [
         (f"tier{p}", p, d.filter(F.col("pr") == p).select("doc_id", "text"))
         for p in (2, 1, 0)
@@ -533,16 +528,11 @@ def ngram_novelty_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles and LOWER a novelty score w.h.p.-never; the DuckDB oracle
     counts collision-free strings, so parity itself certifies no
     collision fired at the graded scale."""
-    from pyspark import StorageLevel
-
     from eligibility_etl_airflow_spark.operators import neardup
-
     d = Catalog(spark, sf_dir).documents
-    # persisted: the denominator pass and the frequency aggregate both
-    # consume the shingled relation (the shingle_table cache contract)
-    sh = neardup.shingle_table(d, "doc_id", "text", shingle_k=5).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # materialized once: the denominator pass and the frequency
+    # aggregate both consume the shingled relation
+    sh = _stable(neardup.shingle_table(d, "doc_id", "text", shingle_k=5))
     per_doc = sh.select(
         F.col("id").cast("long").alias("doc_id"),
         F.size("shingles").cast("long").alias("n_grams"),

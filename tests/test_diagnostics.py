@@ -68,6 +68,21 @@ def test_pushed_filter_scans_counted(spark, sf_dir):
     assert s.scans >= 1 and s.pushed_filter_scans >= 1
 
 
+def test_plan_summary_ignores_the_plan_string_cap(spark, sf_dir):
+    """The summary walks plan nodes: capping the plan string at 2,000
+    characters leaves it unchanged on a plan that prints longer."""
+    df = registry.QUERIES["bm25_search"](spark, sf_dir)
+    assert len(df._jdf.queryExecution().executedPlan().toString()) > 2000
+    full = diagnostics.plan_summary(df)
+    assert full.exchanges >= 1 and full.scans >= 1
+    spark.conf.set("spark.sql.maxPlanStringLength", "2000")
+    try:
+        capped = diagnostics.plan_summary(df)
+    finally:
+        spark.conf.unset("spark.sql.maxPlanStringLength")
+    assert capped == full
+
+
 # Registered claims queries re-run on a schedule; together they need
 # more generated classes than Spark's default codegen cache (100) holds.
 _CLAIMS_QUERIES = (

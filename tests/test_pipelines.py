@@ -2427,6 +2427,22 @@ def _funnel_call(name, spark, sf_dir, tmp_path):
     out, state = str(tmp_path / "out"), str(tmp_path / "state")
     if name == "corpus_curation":
         return lambda: pipelines.run_corpus_curation_pipeline(spark, sf_dir, out)
+    if name == "corpus_curation_semantic":
+        return lambda: pipelines.run_corpus_curation_pipeline(
+            spark, sf_dir, out, semantic_eps=0.9
+        )
+    if name == "incremental_curation_semantic":
+        batch = spark.createDataFrame(
+            [
+                (i, f"document {i} words a{i} b{i} c{i} d{i}",
+                 [1.0 if d == i % 2 else 0.0 for d in range(4)])
+                for i in range(4)
+            ],
+            "doc_id long, text string, embedding array<double>",
+        )
+        return lambda: pipelines.run_incremental_curation(
+            spark, batch, state, semantic_eps=0.99, semantic_k=2
+        )
     if name == "incremental_curation":
         batch = spark.createDataFrame(
             [(1, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -2471,8 +2487,20 @@ _FUNNEL_FIRST_WRITE = {
 }
 
 
-@pytest.mark.parametrize("fails", [False, True], ids=["returns", "raises"])
-@pytest.mark.parametrize("name", sorted(_FUNNEL_FIRST_WRITE))
+@pytest.mark.parametrize(
+    "name, fails",
+    [
+        pytest.param(name, fails, id=f"{name}-{'raises' if fails else 'returns'}")
+        for name in sorted(_FUNNEL_FIRST_WRITE)
+        for fails in (False, True)
+    ]
+    # the semantic tiers run before the first write, so a raise there
+    # adds nothing the plain funnels do not cover
+    + [
+        pytest.param(name, False, id=f"{name}-returns")
+        for name in ("corpus_curation_semantic", "incremental_curation_semantic")
+    ],
+)
 def test_funnels_release_their_caches(spark, sf_dir, tmp_path, monkeypatch, name, fails):
     """Every curation/crawl funnel leaves Spark's cache manager empty,
     both after a normal return and after a stage raises mid-funnel."""

@@ -119,14 +119,16 @@ def test_minhash_signature_stage_has_no_shuffle(spark, sf_dir):
 
 
 def test_embedding_neardup_reuses_cached_buckets(spark, sf_dir):
-    """The bucketed relation feeds three consumers; the persist must show
-    up as InMemoryTableScan so the hyperplane projection runs once."""
+    """The bucketed relation feeds three consumers; it is materialized
+    before the pair plan is built, so the plan scans it and never
+    re-runs the hyperplane projection."""
     from eligibility_etl_airflow_spark.operators import similarity
 
     e = Catalog(spark, sf_dir).embeddings
     pairs = similarity.embedding_neardup_pairs(e, cosine_threshold=0.8, dim=64)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, plan
+    assert "ExistingRDD" in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_blocked_components_shuffle_budget(spark):
@@ -416,9 +418,12 @@ def test_embedding_joins_never_broadcast_corpus_array_sides(spark, sf_dir):
             assert not hit, (name, sorted(hit), inp[:300])
 
 
-def test_set_similarity_normalizes_and_splits_once(spark, sf_dir):
+def test_set_similarity_normalizes_and_splits_once(spark, sf_dir, monkeypatch):
     from eligibility_etl_airflow_spark.operators import neardup
 
+    # the shingle relation is materialized before the join plan is built;
+    # keep it lazy here so the plan shows the stages that compute it
+    monkeypatch.setattr(neardup, "_stable", lambda df: df)
     d = Catalog(spark, sf_dir).documents
     plan = (
         neardup.set_similarity_join(d, "doc_id", "text", threshold=0.5, shingle_k=5)
@@ -464,11 +469,12 @@ def test_semantic_dedup_assignment_is_map_only(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     # TWO Arrow maps do the work — the assignment matmul + the
-    # per-cluster compare; the persisted assignment's cached plan is
-    # inlined under InMemoryTableScan in the plan STRING, so its
-    # MapInPandas can print once more (2-3 occurrences, never 4+ —
-    # 4 would mean a new Python stage crept into the tier)
-    assert 2 <= plan.count("MapInPandas") <= 3
+    # per-cluster compare. The assignment is materialized once before
+    # the plan is built (it prints as a scan of the materialized rows),
+    # so the plan itself holds only the compare; a second MapInPandas
+    # would mean a new Python stage crept into the tier
+    assert "ExistingRDD" in plan
+    assert plan.count("MapInPandas") == 1
     assert "BatchEvalPython" not in plan
 
 

@@ -135,3 +135,21 @@ def test_read_jdbc_roundtrip_against_embedded_derby(spark):
     assert parallel.count() == 100
     got = {(r.id, r.v) for r in parallel.collect()}
     assert got == {(i, float(i % 7)) for i in range(100)}
+
+
+def test_catalog_keeps_one_relation_per_rewritten_path(spark, sf_dir, tmp_path):
+    """A table rewritten in place three times in one session leaves one
+    relation-cache entry for its path, and every read sees the new rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from eligibility_etl_airflow_spark import catalog
+
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    path = tmp_path / "documents.parquet"
+    for n in (10, 20, 30):
+        pq.write_table(docs.slice(0, n), path)
+        assert catalog.Catalog(spark, str(tmp_path)).documents.count() == n
+    entries = catalog._RELATION_CACHE[spark]
+    assert sum(str(path) in str(key) for key in entries) == 1

@@ -7,9 +7,8 @@ For every registered query (or a --only subset), measures SEPARATELY:
   t_exec   — noop-sink execution, best-of-N (guide §1.4)
 
 and writes the ``explain("formatted")`` output to plans/<tag>/<query>_<suffix>.txt
-so plan-shape claims are auditable. clearCache() before every query:
-these are STANDALONE attribution numbers (bench.py suite mode shares
-persisted intermediates; do not compare totals across the two).
+so plan-shape claims are auditable. clearCache() before every query,
+as bench.py does.
 
 Usage:
   python tools/opt_attrib.py [--only q1,q2] [--reps 2] [--tag r10] \

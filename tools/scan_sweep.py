@@ -5,14 +5,12 @@ top-k persists): an expensive lineage consumed by 2+ branches re-executes
 wherever exchange reuse does not cover the differing subtrees, and the
 DataFrame code reads as if the intermediate were materialized.
 
-Caveat on reading the output: scan counts come from the PLAN TEXT, and a
-persisted subtree prints its full lineage under InMemoryRelation while
-executing it once (to fill the cache). So a flagged query with
-inmem > 0 is usually fine — its true scan count is roughly
-(scans under no cache) + (one fill per cached relation). A flagged query
-with inmem == 0 re-executes every printed scan; those are the ones to
-inspect. Legitimate inmem == 0 multi-scanners exist too: set operations
-and funnels scan per branch BY SEMANTICS, and recomputing a corpus-sized
+Reading the output: scan counts come from the PLAN TEXT. Registered
+queries leave nothing in Spark's cache, so every printed scan executes;
+a relation materialized up front (``sinks._stable``) prints as one
+``Scan ExistingRDD`` and its own scans ran once, before the plan was
+built. Legitimate multi-scanners exist: set operations and funnels
+scan per branch BY SEMANTICS, and recomputing a corpus-sized
 intermediate is often cheaper than materializing it (the token-stream
 trade in operators/lm.py) — the sweep locates candidates, the plan
 decides.
@@ -58,10 +56,8 @@ def main() -> None:
         tables = Counter(re.findall(r"file:[^\s,\]]*/(\w+)\.parquet", plan))
         multi = {t: n for t, n in tables.items() if n >= min_scans}
         if multi:
-            inmem = plan.count("InMemoryRelation")
-            print(f"{name}: scans={multi} inmem={inmem}")
+            print(f"{name}: scans={multi}")
             flagged += 1
-        spark.catalog.clearCache()
     print(f"flagged {flagged} of {len(registry.QUERIES)} queries")
 
 
